@@ -62,7 +62,39 @@ SLOW_TESTS = {
 }
 
 
+def stale_slow_tests(items) -> list[str]:
+    """SLOW_TESTS entries whose test file was collected but which name no
+    test that file defines (renamed or deleted): such an entry would
+    silently drop its test back into the default tier. Entries of files
+    not collected this session are not judged, and a test that exists
+    but was narrowed away (``file::name`` arguments, ``--lf``) is not
+    stale."""
+    modules = {
+        item.nodeid.split("::")[0]: item.module
+        for item in items
+        if getattr(item, "module", None) is not None
+    }
+    collected = {item.nodeid for item in items}
+    stale = []
+    for nodeid in sorted(SLOW_TESTS):
+        path, *names = nodeid.split("::")
+        if path not in modules or nodeid in collected:
+            continue
+        obj = modules[path]
+        for name in names:
+            obj = getattr(obj, name, None)
+        if not callable(obj):
+            stale.append(nodeid)
+    return stale
+
+
 def pytest_collection_modifyitems(config, items):
+    stale = stale_slow_tests(items)
+    if stale:
+        raise pytest.UsageError(
+            "tests/conftest.py SLOW_TESTS names tests that do not exist: "
+            + ", ".join(stale)
+        )
     for item in items:
         if item.nodeid in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)

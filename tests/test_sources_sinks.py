@@ -5,7 +5,12 @@ from __future__ import annotations
 
 import functools
 import json
+import os
 import sqlite3
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -208,11 +213,13 @@ def test_parquet_target_id_prefix_roundtrip(spark, tmp_path):
 # --------------------------------------------------------------------- #
 
 @pytest.fixture()
-def sqlite_target(tmp_path):
+def sqlite_target(request, tmp_path):
+    # indirect param: the SQL type of the id column (default TEXT)
+    id_type = getattr(request, "param", "TEXT")
     db = str(tmp_path / "t.db")
     conn = sqlite3.connect(db)
     conn.execute(
-        "CREATE TABLE records (id TEXT PRIMARY KEY, title TEXT, version INTEGER, hidden INTEGER DEFAULT 0)"
+        f"CREATE TABLE records (id {id_type} PRIMARY KEY, title TEXT, version INTEGER, hidden INTEGER DEFAULT 0)"
     )
     conn.commit()
     conn.close()
@@ -291,6 +298,81 @@ def test_dbapi_setup(spark, sqlite_target):
         table="no_such_table",
     )
     assert bad.setup(spark).has_errors
+
+
+@pytest.mark.parametrize("sqlite_target", ["TEXT", "INTEGER"], indirect=True)
+def test_dbapi_current_state_normalises_keyset(spark, sqlite_target):
+    """The keyset read's per-value contract: ids come back as strings
+    whatever their SQL type, NULL version stays NULL, NULL hidden reads
+    as False."""
+    target, db = sqlite_target
+    conn = sqlite3.connect(db)
+    conn.executemany(
+        "INSERT INTO records (id, version, hidden) VALUES (?, ?, ?)",
+        [(7, None, None), (8, 3, 1), (9, 4, 0)],
+    )
+    conn.commit()
+    conn.close()
+    state = target.current_state(spark)
+    assert state.schema.simpleString() == (
+        "struct<id:string,version:bigint,hidden:boolean>"
+    )
+    assert sorted(tuple(r) for r in state.collect()) == [
+        ("7", None, False), ("8", 3, True), ("9", 4, False),
+    ]
+
+
+def test_dbapi_current_state_empty_table(spark, sqlite_target):
+    target, _ = sqlite_target
+    state = target.current_state(spark)
+    assert state.count() == 0
+    assert state.schema.simpleString() == (
+        "struct<id:string,version:bigint,hidden:boolean>"
+    )
+
+
+def test_dbapi_current_state_crosses_fetch_batches(spark, sqlite_target):
+    """N + 1 rows: the read spans two fetchmany batches and loses or
+    repeats no row at the boundary."""
+    from wwwision_importservice_spark.sinks.dbapi import KEYSET_FETCH_ROWS
+
+    target, db = sqlite_target
+    n = KEYSET_FETCH_ROWS + 1
+    conn = sqlite3.connect(db)
+    conn.executemany(
+        "INSERT INTO records (id, version, hidden) VALUES (?, ?, ?)",
+        [(f"r{i}", i, i % 2) for i in range(n)],
+    )
+    conn.commit()
+    conn.close()
+    got = sorted(tuple(r) for r in target.current_state(spark).collect())
+    assert got == sorted((f"r{i}", i, bool(i % 2)) for i in range(n))
+
+
+def test_dbapi_current_state_is_an_eager_snapshot(spark, sqlite_target):
+    """The pipeline applies to the table while the frame diffed against
+    it is still in use: the frame must not read the table again, and
+    the read's connection is closed when current_state returns."""
+    target, db = sqlite_target
+    opened = []
+
+    def factory():
+        opened.append(sqlite3.connect(db))
+        return opened[-1]
+
+    target.connection_factory = factory
+    conn = sqlite3.connect(db)
+    conn.execute("INSERT INTO records (id, version) VALUES ('a', 1)")
+    conn.commit()
+    state = target.current_state(spark)
+    for c in opened:
+        with pytest.raises(sqlite3.ProgrammingError):
+            c.execute("SELECT 1")
+    conn.execute("INSERT INTO records (id, version) VALUES ('b', 1)")
+    conn.execute("UPDATE records SET version = 2 WHERE id = 'a'")
+    conn.commit()
+    conn.close()
+    assert [tuple(r) for r in state.collect()] == [("a", 1, False)]
 
 
 def test_bucketed_target_lifecycle(spark, tmp_path):
@@ -1139,6 +1221,47 @@ def test_dbapi_error_samples_and_unmatched(spark, tmp_path):
         spark, make_cdc(spark, [("ghost", 2, "u", "update")])
     )
     assert stats2.unmatched == 1
+
+
+def test_dbapi_apply_needs_no_package_on_worker_path(tmp_path):
+    """Python workers start in the driver's working directory with the
+    driver's PYTHONPATH, not its sys.path. A driver started elsewhere,
+    with the package only on sys.path, must still apply: everything the
+    foreachPartition closure needs ships by value."""
+    db = tmp_path / "t.db"
+    conn = sqlite3.connect(db)
+    conn.execute(
+        "CREATE TABLE records (id TEXT PRIMARY KEY, title TEXT, version INTEGER)"
+    )
+    conn.commit()
+    conn.close()
+    script = textwrap.dedent(f"""
+        import functools, sqlite3, sys
+        sys.path.insert(0, {str(Path(__file__).resolve().parents[1])!r})
+        from wwwision_importservice_spark.session import get_spark
+        from wwwision_importservice_spark.sinks.dbapi import DbapiTarget
+
+        spark = get_spark("no-pythonpath")
+        target = DbapiTarget(
+            functools.partial(sqlite3.connect, {str(db)!r}), "records",
+            version_column="version", write_partitions=1,
+        )
+        cdc = spark.createDataFrame(
+            [("a", 1, "t", "add")],
+            "_id string, _version long, title string, change_type string",
+        )
+        stats = target.apply(spark, cdc)
+        assert (stats.added, stats.errors) == (1, 0), stats
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="512m")
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert q(str(db), "SELECT id, title, version FROM records") == [("a", "t", 1)]
 
 
 # --------------------------------------------------------------------- #

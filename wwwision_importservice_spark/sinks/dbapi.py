@@ -21,6 +21,15 @@ The Python analogue of the reference's Doctrine-DBAL target
   \\Error and aborts on \\Exception),
 - W4 removeAll    → single ``DELETE FROM`` returning the count.
 
+State read (``current_state``, ``DbalTarget.php:118-128``): the narrow
+keyset ``(id[, version][, hidden])`` is fetched driver-side in
+``fetchmany`` batches of ``KEYSET_FETCH_ROWS``; each batch is normalised
+column by column into one Arrow record batch, and the batches reach
+Spark as one Arrow table. The Python-tuple footprint is one fetch batch,
+not the whole keyset (the reference holds it all in a PHP array), and
+the frame is an eager snapshot: the connection is closed before it is
+returned and it never reads the table again.
+
 Delivery semantics are AT-LEAST-ONCE per Spark task: a task retry
 (executor loss, speculation) re-runs a partition whose chunks may have
 already committed. Re-applied UPDATE/DELETEs are naturally idempotent;
@@ -49,6 +58,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
+import pyarrow as pa
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,6 +77,23 @@ MAXIMUM_BATCH_SIZE = 1000  # ContentRepositoryTarget.php:43-45
 _PARAMSTYLES = {"qmark": "?", "format": "%s", "pyformat": "%s"}
 
 _MAX_ERROR_SAMPLES = 5
+
+#: rows per ``fetchmany`` in ``current_state``: the keyset read holds at
+#: most this many Python tuples at a time, whatever the table size
+KEYSET_FETCH_ROWS = 10_000
+
+
+# per-column normalisers of the keyset read (one fetch batch at a time)
+def _str_column(values: tuple) -> list:
+    return [str(v) if v is not None else None for v in values]
+
+
+def _int_column(values: tuple) -> list:
+    return [int(v) if v is not None else None for v in values]
+
+
+def _hidden_column(values: tuple) -> list:
+    return [bool(v) if v is not None else False for v in values]
 
 
 def _make_replay_probe(table: str, id_col: str, ph: str, insert_cols: list[str]):
@@ -95,17 +122,23 @@ def _make_replay_probe(table: str, id_col: str, ph: str, insert_cols: list[str])
     return probe
 
 
-class _ErrorSamples(AccumulatorParam):
-    """AccumulatorParam collecting a bounded list of quarantine
-    examples executor-side (module-level so it pickles by reference)."""
+def _make_error_samples_param(limit: int) -> AccumulatorParam:
+    """AccumulatorParam collecting at most ``limit`` quarantine examples
+    executor-side. The class is defined inside the factory so cloudpickle
+    ships it by value with the ``foreachPartition`` closure; a
+    module-level class pickles by reference, and every Python worker
+    would then have to import this package."""
 
-    def zero(self, value):
-        return []
+    class ErrorSamples(AccumulatorParam):
+        def zero(self, value):
+            return []
 
-    def addInPlace(self, a, b):
-        a.extend(b)
-        del a[_MAX_ERROR_SAMPLES:]
-        return a
+        def addInPlace(self, a, b):
+            a.extend(b)
+            del a[limit:]
+            return a
+
+    return ErrorSamples()
 
 
 class DbapiTarget(DataTarget):
@@ -141,35 +174,38 @@ class DbapiTarget(DataTarget):
 
     # ------------------------------------------------------------------ #
     def current_state(self, spark: SparkSession) -> DataFrame:
-        """Narrow scan: SELECT id[, version][, hidden] — DbalTarget.php:118-128."""
-        cols = [self.id_column]
+        """Narrow scan: SELECT id[, version][, hidden] — DbalTarget.php:118-128.
+
+        The keyset is read columnar: each ``fetchmany(KEYSET_FETCH_ROWS)``
+        batch is transposed, normalised per column (id → ``str``,
+        version → ``int``, both keeping NULL; NULL hidden → ``False``)
+        and becomes one Arrow record batch, so at most one batch of
+        Python tuples is alive at a time. The frame is an eager
+        snapshot: the connection is closed before the Arrow table is
+        handed to Spark, so later writes to the table (``apply`` of this
+        very run) never show through it."""
+        keyset = [(self.id_column, pa.string(), _str_column)]
         if self.version_column:
-            cols.append(self.version_column)
+            keyset.append((self.version_column, pa.int64(), _int_column))
         if self.hidden_column:
-            cols.append(self.hidden_column)
+            keyset.append((self.hidden_column, pa.bool_(), _hidden_column))
+        schema = pa.schema([(name, typ) for name, typ, _ in keyset])
+        batches = []
         conn = self.connection_factory()
         try:
             cur = conn.cursor()
-            cur.execute(f"SELECT {', '.join(cols)} FROM {self.table}")
-            rows = cur.fetchall()
+            cur.execute(f"SELECT {', '.join(schema.names)} FROM {self.table}")
+            while rows := cur.fetchmany(KEYSET_FETCH_ROWS):
+                batches.append(pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(norm(column), typ)
+                        for (_, typ, norm), column in zip(keyset, zip(*rows))
+                    ],
+                    schema=schema,
+                ))
         finally:
             conn.close()
-        schema_parts = [f"{self.id_column} string"]
-        if self.version_column:
-            schema_parts.append(f"{self.version_column} long")
-        if self.hidden_column:
-            schema_parts.append(f"{self.hidden_column} boolean")
-        def norm(r: tuple) -> tuple:
-            out: list[Any] = [str(r[0]) if r[0] is not None else None]
-            i = 1
-            if self.version_column:
-                out.append(int(r[i]) if r[i] is not None else None)
-                i += 1
-            if self.hidden_column:
-                out.append(bool(r[i]) if r[i] is not None else False)
-            return tuple(out)
-
-        return spark.createDataFrame([norm(r) for r in rows], ", ".join(schema_parts))
+        return spark.createDataFrame(pa.Table.from_batches(batches, schema))
 
     # ------------------------------------------------------------------ #
     def _attr_columns(self, cdc: DataFrame) -> list[str]:
@@ -226,15 +262,17 @@ class DbapiTarget(DataTarget):
         upd_acc = sc.accumulator(0)
         rem_acc = sc.accumulator(0)
         unmatched_acc = sc.accumulator(0)
-        sample_acc = sc.accumulator([], _ErrorSamples())
+        sample_acc = sc.accumulator([], _make_error_samples_param(_MAX_ERROR_SAMPLES))
 
         has_ver = ver_col is not None
         ct_col = CHANGE_TYPE_COL
         ct_add, ct_update = ChangeType.ADD, ChangeType.UPDATE
 
-        # Self-contained closure (plain-value captures only): cloudpickle
-        # ships it by value so executors don't need this package on their
-        # sys.path.
+        # Self-contained closure: write_partition captures plain values,
+        # the nested replay probe and accumulators whose param class is
+        # local to its factory, so cloudpickle ships all of it by value
+        # and Python workers never import this package (tested from a
+        # foreign cwd without PYTHONPATH).
         replay_probe = _make_replay_probe(table, id_col, ph, insert_cols)
 
         def write_partition(rows_iter) -> None:

@@ -453,7 +453,14 @@ def near_dup_gate(
                 # ``index.count()`` job. Crash-safe like the read cache:
                 # a retried/foreign commit changes the token and forces
                 # a fresh count; compaction (which can change the row
-                # count) pops the entry below.
+                # count) pops the entry below. Precondition: a single
+                # writer. The parked count is right only if no foreign
+                # commit lands between the append and the
+                # ``success_marker_token`` read below — such a commit
+                # would be folded into the token we park under, with
+                # its rows missing from the count. ``claim_writer``
+                # guarantees this today; a multi-writer index must drop
+                # the carry and count.
                 new_token = success_marker_token(spark, index_dir)
                 if new_token is not None:
                     _INDEX_READ_CACHE[index_dir] = {
