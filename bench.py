@@ -96,9 +96,9 @@ pair recall (found almost nothing; see the query docstring's
 recall/volume grid) — and (+1.5s) the set gained j7_incremental_sync — the narrow-diff sync
 plan, measured alongside the wide j4 baseline. j7 is SLOWER than j4 on
 this thin-row fixture by design (stage overhead dominates when the
-payload is 2 small columns); its shuffle-byte advantage on realistic
-kilobyte rows is measured and pinned in
-test_incremental_diff_shuffles_less_than_full. Correct-but-slower
+payload is 2 small columns); the lane was later retired together
+with the narrow-diff plan, which lost to the single full-outer join on
+the repo benchmark (numbers in operators/diff.py). Correct-but-slower
 beats fast-but-broken, and measured-honestly beats cherry-picked.
 """
 
@@ -153,7 +153,6 @@ SLOPE_RUNS = 2
 # similarity, text analysis, streaming windows in batch form).
 HEADLINE = [
     "j4_changeset",
-    "j7_incremental_sync",
     "j5_soft_delete",
     "k1_keying_dedup",
     "k11_mapping",

@@ -24,8 +24,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
 # duration — they are the per-query correctness net the default tier
 # exists to provide.
 SLOW_TESTS = {
-    "tests/test_diff_properties.py::test_diff_broadcast_path_matches_model",
-    "tests/test_diff_properties.py::test_diff_incremental_path_matches_model",
     "tests/test_diff_properties.py::test_diff_matches_reference_model",
     "tests/test_extensions.py::test_append_manifest_n_packs_merge_boundary_cases",
     "tests/test_extensions.py::test_append_recovery_fuzz_protocol_mutations",
@@ -54,7 +52,6 @@ SLOW_TESTS = {
     "tests/test_extensions.py::test_sketch_store_replay_after_compaction_not_double_counted",
     "tests/test_extensions.py::test_store_drift_detects_shift_and_stability",
     "tests/test_extensions.py::test_train_ivf_centroids_improves_recall",
-    "tests/test_pipeline.py::test_diff_strategies_agree_end_to_end",
     "tests/test_streaming.py::test_lsh_index_compaction_preserves_decisions",
     "tests/test_streaming.py::test_near_dup_gate_under_real_stream_engine",
     "tests/test_streaming.py::test_streaming_ingest_example",

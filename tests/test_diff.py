@@ -3,8 +3,6 @@ delete, idPrefix (SURVEY §5 sync-semantics list)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from wwwision_importservice_spark.operators.diff import (
     ChangeType,
     changeset_counts,
@@ -136,174 +134,23 @@ def test_changeset_counts(spark):
     assert got == {"add": 1, "update": 1, "remove": 1}
 
 
-def test_broadcast_split_path_matches_full_outer(spark):
-    # broadcast_local=True uses the split three-join plan; results must
-    # match the full-outer formulation exactly.
-    rows = [
-        ("new", 5, "p", 1),
-        ("stale", 9, "p", 2),
-        ("same", 7, "p", 3),
-        ("unversioned", None, "p", 4),
-    ]
-    loc_rows = [
-        ("stale", 5, False),
-        ("same", 7, False),
-        ("unversioned", 1, False),
-        ("gone", 1, False),
-        ("hidden_gone", 1, True),
-    ]
-    src = source(spark, rows)
-    loc = local(spark, loc_rows)
-    kwargs = dict(
-        local_id_col="id", local_version_col="version", local_hidden_col="hidden"
-    )
-    default = by_type(compute_changes(src, loc, **kwargs))
-    split = by_type(compute_changes(src, loc, broadcast_local=True, **kwargs))
-    assert split == default == {
-        ChangeType.ADD: {"new"},
-        ChangeType.UPDATE: {"stale", "unversioned"},
-        ChangeType.REMOVE: {"gone"},
-    }
-    cdc = compute_changes(src, loc, broadcast_local=True, **kwargs)
-    plan = cdc._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in plan
-
-
-# --------------------------------------------------------------------------- #
-# incremental_changes — narrow-diff / late-materialization replan
-# --------------------------------------------------------------------------- #
-
-def _cdc_rows(cdc):
-    cols = sorted(cdc.columns)
-    return sorted(
-        tuple((c, row[c]) for c in cols) for row in cdc.collect()
-    )
-
-
-def test_incremental_matches_compute_changes(spark):
-    """Assumption-free mode (no watermark) is row-identical to the wide
-    full-outer plan across every change class, incl. duplicates resolved
-    by K1 last-wins upstream."""
-    from wwwision_importservice_spark.operators.diff import incremental_changes
-
-    rows = [
-        ("new", 5, "p1", 1),
-        ("stale", 9, "p2", 2),
-        ("same", 7, "p3", 3),
-        ("older", 3, "p4", 4),
-        ("unv", None, "p5", 5),
-        ("dup", 1, "first", 6),
-        ("dup", 2, "last", 7),   # last-wins upstream dedup
-    ]
-    src = source(spark, rows)
-    loc = local(
-        spark,
-        [
-            ("stale", 5, False),
-            ("same", 7, False),
-            ("older", 9, False),
-            ("gone", 1, False),
-            ("hidden-gone", 1, True),
-            ("unv", 3, False),
-        ],
-    )
-    kw = dict(local_id_col="id", local_version_col="version",
-              local_hidden_col="hidden")
-    expected = compute_changes(src, loc, **kw)
-    got = incremental_changes(src, loc, **kw)
-    assert _cdc_rows(got) == _cdc_rows(expected)
-    # and with the shuffle fallback for the changed-slice re-join
-    got_shuffle = incremental_changes(src, loc, broadcast_changed=False, **kw)
-    assert _cdc_rows(got_shuffle) == _cdc_rows(expected)
-
-
-def test_incremental_wide_source_defers_dedup(spark):
-    """wide_source: the keyed-raw (dedup=False) frame re-materializes
-    attributes after the broadcast id-filter; the winning duplicate must
-    match the upstream K1 winner."""
-    from wwwision_importservice_spark.operators.diff import incremental_changes
-
-    raw = spark.createDataFrame(
-        [
-            ("stale", 9, "loser", 1),
-            ("stale", 9, "winner", 2),   # last-wins by _ord
-            ("new", 5, "p", 3),
-        ],
-        "id string, v long, payload string, _ord long",
-    )
-    keyed_raw = RecordFrame.from_raw(
-        raw, "id", version_attribute="v", order_by="_ord", dedup=False
-    ).df
-    src = RecordFrame.from_raw(
-        raw, "id", version_attribute="v", order_by="_ord"
-    ).df
-    loc = local(spark, [("stale", 5, False), ("gone", 1, False)])
-    kw = dict(local_id_col="id", local_version_col="version")
-    expected = compute_changes(src, loc, **kw)
-    got = incremental_changes(
-        src, loc, wide_source=keyed_raw, wide_order_by=F.col("_ord"), **kw
-    )
-    assert _cdc_rows(got) == _cdc_rows(expected)
-    payloads = {r["_id"]: r["payload"] for r in got.collect()
-                if r["change_type"] != ChangeType.REMOVE}
-    assert payloads["stale"] == "winner"
-
-
-def test_incremental_watermark_narrows_updates_only(spark):
-    """version_watermark: intersecting rows at-or-below W are proven
-    no-ops (the CDC monotone-version contract); adds/removes unaffected."""
-    from wwwision_importservice_spark.operators.diff import incremental_changes
-
-    src = source(
-        spark,
-        [
-            ("recent", 100, "p", 1),   # > W, local older → update
-            ("old-touch", 40, "p", 2),  # <= W, local older → assumed no-op
-            ("unv", None, "p", 3),      # NULL version → always update
-            ("new", 10, "p", 4),        # add regardless of W
-        ],
-    )
-    loc = local(
-        spark,
-        [("recent", 50, False), ("old-touch", 20, False),
-         ("unv", 7, False), ("gone", 1, False)],
-    )
-    got = by_type(
-        incremental_changes(
-            src, loc, local_id_col="id", local_version_col="version",
-            version_watermark=50,
-        )
-    )
-    assert got == {
-        ChangeType.ADD: {"new"},
-        ChangeType.UPDATE: {"recent", "unv"},
-        ChangeType.REMOVE: {"gone"},
-    }
-
-
 def test_empty_source_yields_removes_only(spark):
     """Empty source frame → every active local row removes, hidden rows
-    excluded (the verify-recipe probe); both physical plans agree."""
-    from wwwision_importservice_spark.operators.diff import incremental_changes
-
+    excluded (the verify-recipe probe)."""
     src = source(spark, []).limit(0)
     loc = local(spark, [("a", 1, False), ("b", 2, True), ("c", 3, False)])
     kw = dict(local_id_col="id", local_version_col="version",
               local_hidden_col="hidden")
-    for fn in (compute_changes, incremental_changes):
-        got = by_type(fn(src, loc, **kw))
-        assert got == {ChangeType.REMOVE: {"a", "c"}}, fn.__name__
+    got = by_type(compute_changes(src, loc, **kw))
+    assert got == {ChangeType.REMOVE: {"a", "c"}}
 
 
 def test_empty_local_state_yields_adds_only(spark):
-    from wwwision_importservice_spark.operators.diff import incremental_changes
-
     src = source(spark, [("a", 1, "p", 1), ("b", 2, "p", 2)])
     loc = local(spark, []).limit(0)
     kw = dict(local_id_col="id", local_version_col="version")
-    for fn in (compute_changes, incremental_changes):
-        got = by_type(fn(src, loc, **kw))
-        assert got == {ChangeType.ADD: {"a", "b"}}, fn.__name__
+    got = by_type(compute_changes(src, loc, **kw))
+    assert got == {ChangeType.ADD: {"a", "b"}}
 
 
 def test_broadcast_source_matches_full_outer_sans_removes(spark):

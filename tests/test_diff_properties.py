@@ -5,8 +5,7 @@ A pure-Python model implements the reference's semantics literally
 ``ContentRepositoryTarget.php:95-119``); hypothesis generates arbitrary
 source/target states — duplicate-free keyed maps with optional versions
 and hidden flags — and every generated case must match
-:func:`compute_changes` exactly, in all three physical formulations
-(full-outer, broadcast fast path, incremental narrow-diff).
+:func:`compute_changes` exactly.
 
 Examples are capped (Spark job per case) but minimized failures still
 shrink to tiny states.
@@ -17,10 +16,7 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from wwwision_importservice_spark.operators.diff import (
-    compute_changes,
-    incremental_changes,
-)
+from wwwision_importservice_spark.operators.diff import compute_changes
 
 IDS = st.text(alphabet="abcd", min_size=1, max_size=2)
 VERSIONS = st.one_of(st.none(), st.integers(min_value=0, max_value=5))
@@ -55,10 +51,7 @@ STATES = st.tuples(
 )
 
 
-def run_kernel(
-    spark, source, local, force, skip_added, skip_removed, broadcast,
-    incremental=False,
-):
+def run_kernel(spark, source, local, force, skip_added, skip_removed):
     src_rows = [(k, v) for k, v in source.items()]
     loc_rows = [(k, v, h) for k, (v, h) in local.items()]
     src = spark.createDataFrame(src_rows or [("zz", None)], "_id string, _version long")
@@ -77,10 +70,7 @@ def run_kernel(
         local_version_col="version",
         local_hidden_col="hidden",
     )
-    if incremental:
-        cdc = incremental_changes(src, loc, **kw)
-    else:
-        cdc = compute_changes(src, loc, broadcast_local=broadcast, **kw)
+    cdc = compute_changes(src, loc, **kw)
     return {r["_id"]: r["change_type"] for r in cdc.collect()}
 
 
@@ -94,41 +84,7 @@ def run_kernel(
 def test_diff_matches_reference_model(spark, state):
     source, local, force, skip_added, skip_removed = state
     want = model_diff(source, local, force, skip_added, skip_removed)
-    got = run_kernel(spark, source, local, force, skip_added, skip_removed, False)
-    assert got == want
-
-
-@settings(
-    max_examples=15,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-    derandomize=True,
-)
-@given(STATES)
-def test_diff_broadcast_path_matches_model(spark, state):
-    source, local, force, skip_added, skip_removed = state
-    want = model_diff(source, local, force, skip_added, skip_removed)
-    got = run_kernel(spark, source, local, force, skip_added, skip_removed, True)
-    assert got == want
-
-
-@settings(
-    max_examples=15,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow],
-    derandomize=True,
-)
-@given(STATES)
-def test_diff_incremental_path_matches_model(spark, state):
-    """The narrow-diff / late-materialization replan must be semantics-
-    identical to the reference model for every generated state (all
-    three plans implement ONE ChangeSet definition)."""
-    source, local, force, skip_added, skip_removed = state
-    want = model_diff(source, local, force, skip_added, skip_removed)
-    got = run_kernel(
-        spark, source, local, force, skip_added, skip_removed, False,
-        incremental=True,
-    )
+    got = run_kernel(spark, source, local, force, skip_added, skip_removed)
     assert got == want
 
 

@@ -251,14 +251,48 @@ def test_source_option_overrides():
     assert preset.source.path == "/override.json"
 
 
-def test_force_broadcast_state_option():
-    # the documented broadcast fast path must be reachable from config,
-    # not only from a hand-built Preset
-    cfg = json.loads(json.dumps(CONFIG))
-    cfg["presets"]["users"]["options"] = {"forceBroadcastState": True}
-    preset = PresetRegistry(cfg).build("users")
-    assert preset.force_broadcast_state is True
-    assert PresetRegistry(CONFIG).build("users").force_broadcast_state is False
+@pytest.mark.parametrize(
+    "key, value",
+    [("diffStrategy", "incremental"), ("forceBroadcastState", True),
+     ("autoBroadcastRows", 10)],
+)
+def test_retired_diff_plan_options_warn_and_are_ignored(key, value):
+    """Preset files written when the diff had several plans still load:
+    the retired keys are type-checked, warned about, and change nothing."""
+    import dataclasses
+
+    cfg = {
+        "presets": {
+            "users": {
+                "source": {
+                    "type": "file",
+                    "options": {"path": "/tmp/x.json"},
+                    "id_attribute": "id",
+                },
+                "target": {
+                    "type": "parquet",
+                    "options": {"path": "/tmp/t", "id_column": "id"},
+                },
+            }
+        }
+    }
+
+    def state(preset):
+        return {
+            f.name: (type(v), vars(v)) if f.name in ("source", "target") else v
+            for f in dataclasses.fields(preset)
+            for v in [getattr(preset, f.name)]
+        }
+
+    default = PresetRegistry(cfg).build("users")
+    cfg["presets"]["users"]["options"] = {key: value}
+    with pytest.warns(UserWarning, match=f"{key} ignored"):
+        preset = PresetRegistry(cfg).build("users")
+    assert state(preset) == state(default)
+    # the key's type is still validated
+    cfg["presets"]["users"]["options"] = {key: [value]}
+    with pytest.raises(ConfigurationError, match=key):
+        PresetRegistry(cfg).build("users")
 
 
 # --------------------------------------------------------------------- #
@@ -486,87 +520,6 @@ def test_changelog_idempotent_rerun_and_no_entries_on_failed_apply(
     import os
 
     assert not os.path.exists(f"{clog}/run_id=r2")
-
-
-def test_diff_strategies_agree_end_to_end(spark, tmp_path):
-    """full / broadcast / incremental are the same sync, different
-    physical plans: identical stats and identical final target state
-    across a run that exercises add+update+remove+no-op."""
-    rows_v1 = [("a", 1, "t1", 1), ("b", 2, "t2", 2), ("c", 3, "t3", 3)]
-    rows_v2 = [("a", 9, "t1b", 1), ("b", 2, "t2", 2), ("d", 4, "t4", 4)]
-
-    states = {}
-    stats2 = {}
-    for strategy in ("full", "broadcast", "incremental"):
-        preset = make_preset(
-            tmp_path / strategy, rows_v1,
-            diff_strategy=strategy,
-            force_broadcast_state=strategy == "broadcast",
-        )
-        pipeline = ImportPipeline(preset, spark)
-        assert pipeline.run() == {
-            "added": 3, "updated": 0, "removed": 0, "errors": 0
-        }
-        preset.source.rows = rows_v2
-        stats2[strategy] = pipeline.run()
-        states[strategy] = sorted(
-            (r["id"], r["version"], r["title"])
-            for r in spark.read.parquet(str(tmp_path / strategy / "tgt")).collect()
-        )
-    assert stats2["incremental"] == stats2["full"] == {
-        "added": 1, "updated": 1, "removed": 1, "errors": 0
-    }
-    assert states["incremental"] == states["full"] == states["broadcast"]
-
-
-def test_diff_strategy_option_validation():
-    cfg = {
-        "presets": {
-            "users": {
-                "source": {
-                    "type": "file",
-                    "options": {"path": "/tmp/x.json"},
-                    "id_attribute": "id",
-                },
-                "target": {
-                    "type": "parquet",
-                    "options": {"path": "/tmp/t", "id_column": "id"},
-                },
-                "options": {"diffStrategy": "sideways"},
-            }
-        }
-    }
-    with pytest.raises(ConfigurationError, match="diffStrategy"):
-        PresetRegistry(cfg).build("users")
-    cfg["presets"]["users"]["options"]["diffStrategy"] = "incremental"
-    preset = PresetRegistry(cfg).build("users")
-    assert preset.diff_strategy == "incremental"
-    assert not preset.force_broadcast_state
-
-
-def test_diff_strategy_auto_probes_target_size(spark, tmp_path):
-    """auto: a narrow-state count decides the plan — small target →
-    split broadcast plan; threshold 0 → the full-outer shuffle plan.
-    (AQE cannot make this choice itself: full-outer never broadcasts.)"""
-    rows = [("a", 1, "t", 1), ("b", 2, "t", 2)]
-    preset = make_preset(tmp_path, rows, diff_strategy="auto")
-    pipeline = ImportPipeline(preset, spark)
-    pipeline.run()  # seed the target so current_state is non-empty
-
-    plan = pipeline.explain()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin FullOuter" not in plan
-
-    preset.auto_broadcast_rows = 0
-    plan = pipeline.explain()
-    assert "SortMergeJoin FullOuter" in plan
-
-    # and the sync itself still behaves under auto
-    preset.auto_broadcast_rows = 2_000_000
-    preset.source.rows = [("a", 9, "t2", 1)]
-    assert pipeline.run() == {
-        "added": 0, "updated": 1, "removed": 1, "errors": 0
-    }
 
 
 def test_replay_changelog_helper_and_discovery(spark, tmp_path):

@@ -55,38 +55,10 @@ def main() -> None:
             "```",
             "",
         ]
-    out += broadcast_diff_section(spark, sf_dir, mode)
     out += bucketed_sync_section(spark)
     with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print(f"PLANS.md written ({len(HEADLINE)} queries + bucketed sync)")
-
-
-def broadcast_diff_section(spark, sf_dir, mode) -> list[str]:
-    """The small-target shape: the split broadcast plan of the same
-    ChangeSet (j4_changeset_broadcast, same oracle as j4_changeset)."""
-    import re
-
-    df = QUERIES["j4_changeset_broadcast"](spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(mode)
-    tree = plan.split("\n\n")[0]
-    broadcasts = len(re.findall(r"Broadcast\w*Join", tree))
-    return [
-        "## j4_changeset_broadcast (small-target shape)",
-        "",
-        "The SAME ChangeSet as j4_changeset through the split three-join",
-        f"plan: {broadcasts} broadcast joins of the narrow local keyset;",
-        "the wide source rows never enter a shuffle exchange (FULL OUTER",
-        "itself can never broadcast — BroadcastHashJoinExec limitation,",
-        "pinned in tests/test_plans.py). Use when the pruned target",
-        "keyset fits the broadcast threshold; the bucketed target below",
-        "is the complementary large-target strategy.",
-        "",
-        "```",
-        tree,
-        "```",
-        "",
-    ]
 
 
 def bucketed_sync_section(spark) -> list[str]:
@@ -143,10 +115,8 @@ def bucketed_sync_section(spark) -> list[str]:
                 "the target scan arrives pre-distributed, so the full-outer",
                 f"join plans with exchanges on the SOURCE side only — {exchanges}",
                 "total exchange(s), zero under the bucketed scan. At a 100 TB",
-                "target this removes the dominant per-run shuffle; the",
-                "broadcast split plan (j4_changeset_broadcast) is the",
-                "complementary small-target strategy, since FULL OUTER can",
-                "never broadcast (BroadcastHashJoinExec limitation).",
+                "target this removes the dominant per-run shuffle (FULL OUTER",
+                "can never broadcast — BroadcastHashJoinExec limitation).",
                 "",
                 "```",
                 tree,

@@ -80,7 +80,6 @@ _CHECK_FIRST = [
     "sink_scd2_history",
     "x8_fuzzy_pairs",
     "x7_bm25_stats",
-    "j7_incremental_sync",
     "o3_quarantine",
     "s3b_sessionize",
     "s3_window_session",
@@ -281,28 +280,6 @@ def j4_changeset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# driver=False: evicted to the pytest tier in round 5 to free the 50th
-# driver slot for o3_quarantine — it shares j4_changeset's oracle, so
-# driver-side value coverage of the ChangeSet semantics is unchanged;
-# the broadcast-split PLAN stays pinned in tests/test_plans.py.
-@_register("j4_changeset_broadcast", _cdc_sql(with_hidden=False), driver=False)
-def j4_changeset_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 broadcast fast path — semantically identical ChangeSet (same
-    oracle as j4_changeset) through the split three-join plan
-    (``operators/diff.py`` ``broadcast_local=True``): the local keyset
-    broadcasts like the reference's build-side PHP hash map
-    (``DbalTarget.php:97-103``), so the wide source rows never enter an
-    exchange — the 100 TB-source/small-target shape. Plan pinned by
-    ``test_diff_broadcast_path_has_no_wide_shuffle``."""
-    return compute_changes(
-        orders_source(spark, sf_dir),
-        target_state(spark, sf_dir),
-        local_id_col="id",
-        local_version_col="version",
-        broadcast_local=True,
-    )
-
-
 def _only(spark, sf_dir, change_type):
     cdc = j4_changeset(spark, sf_dir)
     return cdc.filter(F.col("change_type") == change_type)
@@ -360,84 +337,6 @@ def j3_force_updates(spark: SparkSession, sf_dir: str) -> DataFrame:
         local_version_col="version",
         force_updates=True,
     ).filter(F.col("change_type") == "update")
-
-
-@_register("j7_incremental_sync", _cdc_sql(with_hidden=False))
-def j7_incremental_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 through the narrow-diff / late-materialization plan
-    (``operators/diff.py::incremental_changes``): the full-outer diff
-    join runs over ``(_id, _version)`` only and the wide attribute
-    columns re-attach via a broadcast semi-pass over the changed slice —
-    at 100 TB steady-state (70-95% no-op) no exchange ever carries the
-    full wide data — the K1 dedup shuffle, normally the first full-width
-    exchange of every sync, is deferred by the ``wide_source`` path
-    until after the broadcast id-filter, so it moves only the changed
-    slice. Row-identical to ``j4_changeset`` by construction, proven by
-    sharing its oracle verbatim. Plan pinned by
-    ``test_incremental_diff_narrow_shuffle_only``."""
-    from wwwision_importservice_spark.operators.diff import incremental_changes
-
-    raw = RecordFrame.from_raw(
-        load(spark, sf_dir, "orders"),
-        id_attribute="o_orderkey",
-        version_attribute="o_orderdate",
-        dedup=False,
-    ).df.select("_id", "_version", "o_totalprice", "o_orderstatus", "o_orderkey")
-
-    return incremental_changes(
-        orders_source(spark, sf_dir),
-        target_state(spark, sf_dir),
-        local_id_col="id",
-        local_version_col="version",
-        wide_source=raw,
-        wide_order_by=F.col("o_orderkey"),
-    )
-
-
-# Watermark W for the high-watermark twin: mid-range of the o_orderdate
-# epoch span (1992-1998), so the prefilter genuinely changes the update
-# slice and the oracle must encode the narrowed predicate.
-_J7_WATERMARK = 800_000_000
-
-_J7_WATERMARK_SQL = f"""
-SELECT _id, _version, o_totalprice, o_orderstatus, _local_version, change_type
-FROM (
-  SELECT *, CASE WHEN l_id IS NULL THEN 'add'
-                 WHEN s_id IS NULL THEN 'remove'
-                 WHEN s_id IS NOT NULL AND l_id IS NOT NULL
-                      AND (_version IS NULL OR (_version > {_J7_WATERMARK}
-                           AND (_local_version IS NULL OR _version > _local_version)))
-                   THEN 'update'
-            END AS change_type
-  FROM (
-    SELECT coalesce(src._id, loc.id) AS _id,
-           src._id AS s_id, loc.id AS l_id,
-           src._version, src.o_totalprice, src.o_orderstatus,
-           loc.version AS _local_version
-    FROM ({_SRC_SQL}) src FULL OUTER JOIN ({_local_sql()}) loc
-      ON src._id = loc.id
-  ) j
-) cdc WHERE change_type IS NOT NULL
-"""
-
-
-@_register("j7_watermark_sync", _J7_WATERMARK_SQL, driver=False)
-def j7_watermark_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """High-watermark CDC: under the monotone-version contract (every
-    record modified since the last sync carries version > W), rows
-    at-or-below W that intersect the target are proven no-ops before the
-    4-branch predicate runs — the update slice shrinks to the
-    recently-touched records. The oracle encodes the narrowed predicate
-    explicitly; this is deliberately NOT j4's row set."""
-    from wwwision_importservice_spark.operators.diff import incremental_changes
-
-    return incremental_changes(
-        orders_source(spark, sf_dir),
-        target_state(spark, sf_dir),
-        local_id_col="id",
-        local_version_col="version",
-        version_watermark=_J7_WATERMARK,
-    )
 
 
 @_register("j5_soft_delete", _cdc_sql(with_hidden=True))
@@ -826,7 +725,7 @@ WHERE c_custkey NOT IN (SELECT s_suppkey FROM supplier)
 """,
     driver=False,  # long-green since r1; slot ceded to x6_bpe_pack (r10,
     # VERDICT r9 ask #3) — the left-anti-join semantics stay driver-
-    # exercised inside j4_changeset/j7_incremental_sync and this oracle
+    # exercised inside j4_changeset and this oracle
     # stays pinned in the pytest tier
 )
 def t1_ids_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5904,8 +5803,8 @@ def s2_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     window/slide = 2 buckets (the oracle materializes both by cross-
     joining offsets 0 and 1 slide).
 
-    Pytest tier since round 5 (evicted for j7_incremental_sync — the
-    driver registry is capped at 50): s2 was driver-green in r2-r4 and
+    Pytest tier since round 5 (evicted for a diff-plan lane, since
+    retired — the driver registry is capped at 50): s2 was driver-green in r2-r4 and
     shares ``streaming/windows.py`` machinery with the still-driver-
     checked s1/s3; full oracle parity continues under pytest."""
     from wwwision_importservice_spark.streaming.windows import sliding_rollup

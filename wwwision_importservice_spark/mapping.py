@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 
 from wwwision_importservice_spark.errors import ConfigurationError
 from wwwision_importservice_spark.functions.eel import is_eel_expression, translate_eel
+from wwwision_importservice_spark.operators.diff import CHANGE_TYPE_COL
+from wwwision_importservice_spark.record import ID_COL, VERSION_COL
 
 _RECORD_REF = re.compile(r"\brecord\.([A-Za-z_][A-Za-z0-9_]*)")
 
@@ -82,3 +84,11 @@ class Mapper:
         """
         extra = [F.col(c) for c in (keep or []) if c in df.columns]
         return df.select(*extra, *self.columns_for(df))
+
+    def apply_changes(self, cdc: DataFrame) -> DataFrame:
+        """Map a CDC frame: the engine columns ``_id``, ``_version``,
+        ``change_type`` and every ``_local_*`` column carry through
+        unmapped, so the sink still sees the diff's verdict."""
+        keep = [ID_COL, VERSION_COL, CHANGE_TYPE_COL]
+        keep += [c for c in cdc.columns if c.startswith("_local_")]
+        return self.apply(cdc, keep=keep)

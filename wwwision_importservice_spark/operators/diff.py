@@ -16,9 +16,9 @@ the algorithm (``Classes/DataTarget/Dbal/DbalTarget.php:66-85`` and
 
 The reference runs this as a per-record loop probing in-memory hash maps —
 a hand-rolled hash join. Here it is a single **full-outer equi-join on the
-key** plus a CASE expression, which gives Catalyst one shuffle (or zero
-when the local side broadcasts) for all three change classes at once,
-instead of the three separate joins a literal translation would cost.
+key** plus a CASE expression, which gives Catalyst one shuffle for all
+three change classes at once, instead of the three separate joins a
+literal translation would cost.
 
 Output is a CDC frame: all source columns + ``change_type`` ∈
 {'add','update','remove'} (like Delta CDF's ``_change_type``). For
@@ -29,20 +29,30 @@ Scale notes:
   mirrors the reference's narrow target-state scan
   (``DbalTarget.php:118-128``). :func:`compute_changes` re-prunes
   defensively; Catalyst pushes the projection into the scan.
-- ``broadcast_local=True`` hints a broadcast-hash join for small target
-  keysets (the PHP assoc array *is* a build-side hash table —
-  ``DbalTarget.php:97-103``).
-- The DEFAULT single full-outer join can never broadcast, by Spark
-  design: ``BroadcastHashJoinExec`` supports inner/left/right/semi/anti
-  but not full-outer (the streamed side cannot enumerate the build
-  side's unmatched rows), and AQE therefore won't convert it no matter
-  how small the pruned local side is — it stays a shuffle join (SMJ, or
-  shuffled-hash under AQE). That is exactly why ``broadcast_local=True``
-  exists as a *split* plan — add/update as broadcast inner+left joins,
-  remove as a broadcast anti join, same ChangeSet (same oracle) — and
-  why the bucketed-parquet target removes the *target-side* exchange
-  for the large-target shape instead (``sinks/bucketed.py``). Pinned by
+- The full-outer join can never broadcast, by Spark design:
+  ``BroadcastHashJoinExec`` supports inner/left/right/semi/anti but not
+  full-outer (the streamed side cannot enumerate the build side's
+  unmatched rows), and AQE therefore won't convert it no matter how
+  small the pruned local side is — it stays a shuffle join (SMJ, or
+  shuffled-hash under AQE). Pinned by
   ``test_diff_default_full_outer_stays_shuffle_join``.
+- Two alternative batch plans of the same ChangeSet were measured
+  against it and removed: a *split* broadcast plan (add/update as
+  broadcast inner+left joins, remove as a broadcast anti join) and an
+  *incremental* plan (the full-outer join over ``(_id, _version)``
+  only, wide attributes re-joined for the changed slice). On the repo
+  benchmark (``perfbench/``, 4 vCPU) every pass of all three was
+  correct, and the single full-outer join won every run — warm-pass
+  CPU seconds full / split broadcast / incremental: ``sync_delta_sql``
+  2.33 / 4.56 / 2.91 and 2.17 / 4.81 / 3.34 (two seeds),
+  ``sync_churn_parquet`` 4.14 / 7.37 / 6.31; its peak RSS was lowest
+  in every run too. For a large persistent target the bucketed-parquet
+  target removes the *target-side* exchange instead
+  (``sinks/bucketed.py``).
+- ``broadcast_source=True`` is the one other shape: a small source
+  (a streaming micro-batch) against a large target, where removes are
+  not detected. It shares the projection, CASE and output of the
+  full-outer plan and swaps only the join (see :func:`compute_changes`).
 - No-op rows (present on both sides, version not newer) are filtered
   before any downstream work — at 100 TB the no-op class is typically
   ~70-95% of rows, so dropping them early keeps the sink stage small.
@@ -118,7 +128,6 @@ def compute_changes(
     local_version_col: str | None = None,
     local_hidden_col: str | None = None,
     id_prefix: str | None = None,
-    broadcast_local: bool = False,
     broadcast_source: bool = False,
 ) -> DataFrame:
     """Compute the ChangeSet of ``source`` against ``local_state`` as a CDC frame.
@@ -132,21 +141,27 @@ def compute_changes(
     ``_local_hidden`` when configured). Rows with no change are dropped.
 
     ``broadcast_source=True`` is the SMALL-SOURCE/large-target plan
-    (streaming micro-batches, incremental drops): requires
-    ``skip_removed`` — removal detection needs the full local id set,
-    but adds/updates only need the local rows whose ids appear in the
-    source. Those are carved out with a broadcast LEFT SEMI join
-    (build side = the small source id set), so the big local state is
-    scanned but NEVER shuffled — Spark's BroadcastHashJoin builds the
-    right side for left-outer/semi/anti joins, so the naive
-    ``source LEFT JOIN local`` would instead build (i.e. fully
-    materialize) the big local side. The pruned local slice is
-    source-bounded and broadcasts back for the outer join. Used by
-    ``streaming/sync.py`` per micro-batch.
+    (streaming micro-batches): requires ``skip_removed`` — removal
+    detection needs the full local id set, but adds/updates only need
+    the local rows whose ids appear in the source. Those are carved out
+    with a broadcast LEFT SEMI join (build side = the small source id
+    set), so the big local state is scanned but NEVER shuffled — Spark's
+    BroadcastHashJoin builds the right side for left-outer/semi/anti
+    joins, so the naive ``source LEFT JOIN local`` would instead build
+    (i.e. fully materialize) the big local side. The pruned local slice
+    is source-bounded and broadcasts back for a LEFT join in place of
+    the full-outer one; the remove branch of the CASE cannot fire on it.
+    Used by ``streaming/sync.py`` per micro-batch.
     """
+    if broadcast_source and not skip_removed:
+        raise ValueError(
+            "compute_changes: broadcast_source requires skip_removed "
+            "(removal detection needs the full local id set; the whole "
+            "point of this plan is never materializing it)"
+        )
     # Narrow target-state scan (column pruning like DbalTarget.php:118-128);
     # Catalyst pushes this projection down to the source scan.
-    local_cols = [
+    local = local_state.select(
         strip_id_prefix(F.col(local_id_col).cast("string"), id_prefix).alias(ID_COL),
         (
             F.col(local_version_col).cast("long")
@@ -159,101 +174,20 @@ def compute_changes(
             else F.lit(False)
         ).alias(LOCAL_HIDDEN_COL),
         F.lit(True).alias("__loc_present"),
-    ]
-    local = local_state.select(*local_cols)
+    )
 
     src_version = (
         F.col(VERSION_COL) if VERSION_COL in source.columns else F.lit(None).cast("long")
     )
-
-    if broadcast_local:
-        # Spark cannot broadcast a full-outer join, so for a small target
-        # keyset we split into three joins: add/update become *shuffle-free*
-        # broadcast-hash joins (the wide source rows never move), and the
-        # remove anti-join touches only the two narrow id columns. This is
-        # the 100 TB-source/small-target fast path.
-        b = F.broadcast(local.drop("__loc_present"))
-        attrs = [c for c in source.columns]
-        pred = is_updated_predicate(
-            src_version, F.col(LOCAL_VERSION_COL), force_updates
-        )
-        adds = (
-            source.join(b.select(ID_COL), ID_COL, "left_anti")
-            .withColumn(LOCAL_VERSION_COL, F.lit(None).cast("long"))
-            .withColumn(LOCAL_HIDDEN_COL, F.lit(None).cast("boolean"))
-            .withColumn(CHANGE_TYPE_COL, F.lit(ChangeType.ADD))
-        )
-        updates = (
-            source.join(b, ID_COL, "inner")
-            .filter(pred)
-            .withColumn(CHANGE_TYPE_COL, F.lit(ChangeType.UPDATE))
-        )
-        removes = (
-            local.drop("__loc_present")
-            .filter(~F.col(LOCAL_HIDDEN_COL))
-            .join(source.select(ID_COL), ID_COL, "left_anti")
-            .select(
-                F.col(ID_COL),
-                *[
-                    F.lit(None).cast(source.schema[c].dataType).alias(c)
-                    for c in attrs
-                    if c != ID_COL
-                ],
-                F.col(LOCAL_VERSION_COL),
-                F.col(LOCAL_HIDDEN_COL),
-                F.lit(ChangeType.REMOVE).alias(CHANGE_TYPE_COL),
-            )
-        )
-        out = adds.unionByName(updates)
-        if not skip_removed:
-            out = out.unionByName(removes)
-        if skip_added:
-            out = out.filter(F.col(CHANGE_TYPE_COL) != ChangeType.ADD)
-        keep = list(source.columns)
-        projection = [F.col(c) for c in keep] + [
-            F.col(LOCAL_VERSION_COL),
-            F.col(CHANGE_TYPE_COL),
-        ]
-        if local_hidden_col:
-            projection.insert(-1, F.col(LOCAL_HIDDEN_COL))
-        return out.select(*projection)
+    src = source.withColumn("__src_present", F.lit(True))
 
     if broadcast_source:
-        if not skip_removed:
-            raise ValueError(
-                "compute_changes: broadcast_source requires skip_removed "
-                "(removal detection needs the full local id set; the whole "
-                "point of this plan is never materializing it)"
-            )
         pruned_local = local.join(
             F.broadcast(source.select(ID_COL)), ID_COL, "left_semi"
         )
-        src = source.withColumn("__src_present", F.lit(True))
         joined = src.join(F.broadcast(pruned_local), on=ID_COL, how="left")
-        updated_pred = is_updated_predicate(
-            src_version, F.col(LOCAL_VERSION_COL), force_updates
-        )
-        change = (
-            F.when(F.col("__loc_present").isNull(), F.lit(ChangeType.ADD))
-            .when(updated_pred, F.lit(ChangeType.UPDATE))
-        )
-        out = joined.withColumn(CHANGE_TYPE_COL, change).filter(
-            F.col(CHANGE_TYPE_COL).isNotNull()
-        )
-        if skip_added:
-            out = out.filter(F.col(CHANGE_TYPE_COL) != ChangeType.ADD)
-        keep = [c for c in source.columns]
-        projection = [F.col(c) for c in keep] + [
-            F.col(LOCAL_VERSION_COL),
-            F.col(CHANGE_TYPE_COL),
-        ]
-        if local_hidden_col:
-            projection.insert(-1, F.col(LOCAL_HIDDEN_COL))
-        return out.select(*projection)
-
-    src = source.withColumn("__src_present", F.lit(True))
-
-    joined = src.join(local, on=ID_COL, how="full_outer")
+    else:
+        joined = src.join(local, on=ID_COL, how="full_outer")
 
     updated_pred = is_updated_predicate(
         src_version, F.col(LOCAL_VERSION_COL), force_updates
@@ -281,209 +215,7 @@ def compute_changes(
     if skip_removed:
         out = out.filter(F.col(CHANGE_TYPE_COL) != ChangeType.REMOVE)
 
-    keep = [c for c in source.columns if c != "__src_present"]
-    projection = [F.col(c) for c in keep] + [
-        F.col(LOCAL_VERSION_COL),
-        F.col(CHANGE_TYPE_COL),
-    ]
-    if local_hidden_col:
-        projection.insert(-1, F.col(LOCAL_HIDDEN_COL))
-    return out.select(*projection)
-
-
-def incremental_changes(
-    source: DataFrame,
-    local_state: DataFrame,
-    *,
-    force_updates: bool = False,
-    skip_added: bool = False,
-    skip_removed: bool = False,
-    local_id_col: str = ID_COL,
-    local_version_col: str | None = None,
-    local_hidden_col: str | None = None,
-    id_prefix: str | None = None,
-    version_watermark: int | None = None,
-    broadcast_changed: bool = True,
-    wide_source: DataFrame | None = None,
-    wide_order_by: Column | None = None,
-) -> DataFrame:
-    """:func:`compute_changes` re-planned for the mostly-unchanged sync.
-
-    Same ChangeSet semantics (``DbalTarget.php:66-116``), different
-    physical shape — the reference's ``LazyLoadingDataRecord`` idea
-    (``Classes/ValueObject/LazyLoadingDataRecord.php:8-41``: diff on
-    ``(id, version)`` only, fetch attributes on demand) applied to the
-    whole plan instead of per record:
-
-    1. **Narrow diff** — the full-outer join runs over ``(_id,
-       _version)`` ONLY (~tens of bytes/row), never the wide attribute
-       columns. At 100 TB with kilobyte records that is a 20-100×
-       smaller shuffle than :func:`compute_changes`' single wide join.
-    2. **Late materialization** — wide attributes are joined back for
-       the add/update slice only. In steady-state syncs (70-95% no-op,
-       see module header) the changed slice is small enough to
-       *broadcast* (``broadcast_changed=True``), so the wide source
-       rows are filtered by a broadcast-hash join **without ever
-       entering an exchange**. With ``broadcast_changed=False`` the
-       re-join falls back to a shuffle hash/merge join for high-churn
-       runs where the changed set itself is huge.
-    3. Optional **high-watermark prefilter** (``version_watermark``):
-       when the caller guarantees versions are monotone event times and
-       every record modified since the last successful sync carries
-       ``version > watermark`` (the usual CDC contract), intersecting
-       rows at-or-below the watermark are proven no-ops *before* the
-       predicate runs. The update branch becomes
-       ``src.version IS NULL OR (src.version > W AND <4-branch pred>)``.
-       This is a semantic narrowing, NOT an equivalent plan — adds and
-       removes are still detected exactly (they only need id sets), but
-       an in-place modification that did not bump its version past W is
-       — by contract — assumed not to exist. Leave it ``None`` for the
-       assumption-free plan, which is row-identical to
-       :func:`compute_changes` (pinned by the shared oracle of
-       ``j7_incremental_sync`` / ``j4_changeset``).
-
-    ``wide_source`` closes the last wide-shuffle gap: when ``source``
-    was keyed via ``RecordFrame.from_raw`` its K1 last-wins dedup plants
-    a WindowGroupLimit *exchange of the full wide data* upstream of this
-    operator — narrowing the diff doesn't remove it. Pass the keyed but
-    NOT-yet-deduped frame (``from_raw(..., dedup=False)``) as
-    ``wide_source`` (+ the same ``wide_order_by``) and the wide branch
-    broadcast-filters to the changed ids FIRST, then dedups the
-    surviving slice — same winner per id (dedup commutes with an
-    id-level filter), but the K1 shuffle now carries only the changed
-    few percent. ``wide_order_by`` MUST be a deterministic total order
-    per id (an attribute column, not ``monotonically_increasing_id``):
-    the narrow and wide branches dedup independently, and only a
-    deterministic order makes their winners provably agree — with a
-    non-deterministic tiebreak a duplicate id could be classified
-    update on one duplicate's version but emit the other duplicate's
-    attributes. ``plans/pipeline.py`` enforces this by using the
-    deferred path only when the preset declares an
-    ``order_attribute``. With this, the only wide exchange left in the plan is
-    the changed-slice dedup (its input provably sits below the
-    ``change_type`` tag, i.e. after the broadcast prune); every
-    full-data exchange is narrow (pinned by
-    ``test_incremental_diff_narrow_shuffle_only``). The narrow diff
-    side still uses the deduped ``source`` — Catalyst prunes its dedup
-    to ``(_id, _version)``.
-
-    Output schema and row set match :func:`compute_changes` exactly
-    (when ``version_watermark is None``).
-
-    Measured (sf0.1 orders fixture + 1 KB incompressible payload/row,
-    local[32]): the wide plan shuffles 153.4 MB, this plan 62.8 MB — and
-    the remainder is churn-proportional (the fixture's synthetic churn
-    is ~38%; the single large exchange left is exactly the 56k-row
-    changed slice, 57.7 MB of the 62.8). At a steady-state 2-5% churn
-    the ratio is ~20×. Wall-clock warm: 2.90s vs 1.83s despite the
-    extra stages. The removes branch re-walks the narrow diff but its
-    exchanges come back as ``ReusedExchangeExec`` — verified in the
-    executed plan, no double narrow shuffle. Regression-pinned by
-    ``test_incremental_diff_shuffles_less_than_full`` (metrics-based,
-    <0.35× at 6% churn). On thin-row fixtures (the driver bench's
-    2-column payload) the stage overhead dominates and this plan is
-    ~1.3× SLOWER than j4 — it is a wide-row/low-churn specialist, which
-    is why ``diffStrategy`` defaults to ``full``.
-    """
-    local = local_state.select(
-        strip_id_prefix(F.col(local_id_col).cast("string"), id_prefix).alias(ID_COL),
-        (
-            F.col(local_version_col).cast("long")
-            if local_version_col
-            else F.lit(None).cast("long")
-        ).alias(LOCAL_VERSION_COL),
-        (
-            F.col(local_hidden_col).cast("boolean")
-            if local_hidden_col
-            else F.lit(False)
-        ).alias(LOCAL_HIDDEN_COL),
-        F.lit(True).alias("__loc_present"),
-    )
-
-    has_version = VERSION_COL in source.columns
-    narrow_cols = [ID_COL] + ([VERSION_COL] if has_version else [])
-    # Catalyst prunes the source scan to these two columns for the whole
-    # diff stage; the wide columns are only read by the final re-join.
-    narrow_src = source.select(*narrow_cols).withColumn(
-        "__src_present", F.lit(True)
-    )
-    src_version = (
-        F.col(VERSION_COL) if has_version else F.lit(None).cast("long")
-    )
-
-    updated = is_updated_predicate(
-        src_version, F.col(LOCAL_VERSION_COL), force_updates
-    )
-    if version_watermark is not None and not force_updates:
-        updated = src_version.isNull() | (
-            (src_version > F.lit(version_watermark)) & updated
-        )
-
-    joined = narrow_src.join(local, on=ID_COL, how="full_outer")
-    change = (
-        F.when(F.col("__loc_present").isNull(), F.lit(ChangeType.ADD))
-        .when(
-            F.col("__src_present").isNull() & ~F.col(LOCAL_HIDDEN_COL),
-            F.lit(ChangeType.REMOVE),
-        )
-        .when(
-            F.col("__src_present").isNotNull()
-            & F.col("__loc_present").isNotNull()
-            & updated,
-            F.lit(ChangeType.UPDATE),
-        )
-    )
-    changed = joined.withColumn(CHANGE_TYPE_COL, change).filter(
-        F.col(CHANGE_TYPE_COL).isNotNull()
-    )
-    if skip_added:
-        changed = changed.filter(F.col(CHANGE_TYPE_COL) != ChangeType.ADD)
-    if skip_removed:
-        changed = changed.filter(F.col(CHANGE_TYPE_COL) != ChangeType.REMOVE)
-
-    attrs = list(source.columns)
-    # Removes carry no source attributes — emit them straight off the
-    # narrow join with typed NULLs, no wide data needed.
-    removes = changed.filter(F.col(CHANGE_TYPE_COL) == ChangeType.REMOVE).select(
-        F.col(ID_COL),
-        *[
-            F.lit(None).cast(source.schema[c].dataType).alias(c)
-            for c in attrs
-            if c != ID_COL
-        ],
-        F.col(LOCAL_VERSION_COL),
-        F.col(LOCAL_HIDDEN_COL),
-        F.col(CHANGE_TYPE_COL),
-    )
-
-    au = changed.filter(F.col(CHANGE_TYPE_COL) != ChangeType.REMOVE).select(
-        ID_COL, LOCAL_VERSION_COL, LOCAL_HIDDEN_COL, CHANGE_TYPE_COL
-    )
-    if broadcast_changed:
-        au = F.broadcast(au)
-    if wide_source is not None:
-        from wwwision_importservice_spark.record import dedup_last_wins
-
-        if wide_order_by is None:
-            raise ValueError(
-                "incremental_changes: wide_source requires a deterministic "
-                "wide_order_by (see docstring — a non-deterministic "
-                "tiebreak lets the wide branch pick a different duplicate "
-                "than the narrow diff decided on)"
-            )
-        pruned = wide_source.join(au, on=ID_COL, how="inner")
-        wide = dedup_last_wins(pruned, ID_COL, wide_order_by)
-    else:
-        wide = source.join(au, on=ID_COL, how="inner")
-
-    out = wide.select(
-        *[F.col(c) for c in attrs],
-        F.col(LOCAL_VERSION_COL),
-        F.col(LOCAL_HIDDEN_COL),
-        F.col(CHANGE_TYPE_COL),
-    ).unionByName(removes)
-
-    projection = [F.col(c) for c in attrs] + [
+    projection = [F.col(c) for c in source.columns] + [
         F.col(LOCAL_VERSION_COL),
         F.col(CHANGE_TYPE_COL),
     ]

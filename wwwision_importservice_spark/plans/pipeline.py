@@ -19,18 +19,16 @@ from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from wwwision_importservice_spark.errors import ImportServiceError
 from wwwision_importservice_spark.operators.diff import (
     CHANGE_TYPE_COL,
     ChangeType,
+    changeset_counts,
     compute_changes,
-    incremental_changes,
 )
 from wwwision_importservice_spark.plans.preset import Preset
 from wwwision_importservice_spark.plans.result import Result
-from wwwision_importservice_spark.record import ID_COL, VERSION_COL
 
 
 class Events:
@@ -110,16 +108,9 @@ class ImportPipeline:
 
     # -- the run (ImportService::importData) ----------------------------- #
     def compute_changes(self, force_updates: bool = False) -> DataFrame:
-        """Extract + key + process + diff → CDC frame (lazy).
-
-        The preset's ``diffStrategy`` picks the physical plan (identical
-        ChangeSet): ``full`` = one full-outer join; ``broadcast`` =
-        split 3-join plan for small target keysets; ``incremental`` =
-        narrow ``(_id,_version)`` diff + broadcast late materialization
-        for mostly-unchanged syncs — without a dataProcessor the K1
-        dedup is additionally deferred past the changed-id filter, so no
-        exchange carries the full wide data; ``auto`` = probe the narrow
-        target size (one count job) and pick broadcast vs full."""
+        """Extract + key + process + diff → CDC frame (lazy): one
+        full-outer join of the keyed records against the target's
+        current keyset (``operators/diff.py``)."""
         records = self.preset.load(self.spark)
         if self.preset.quality_checks:
             # data-quality preflight (operators/quality_checks.py): the
@@ -136,8 +127,9 @@ class ImportPipeline:
                 raise ImportServiceError(str(exc)) from exc
         self._dispatch(Events.PRE_COMPUTE_CHANGES, records)
         target = self.preset.target
-        local = target.current_state(self.spark)
-        common = dict(
+        return compute_changes(
+            records.df,
+            target.current_state(self.spark),
             force_updates=force_updates,
             skip_added=self.preset.skip_added,
             skip_removed=self.preset.skip_removed,
@@ -146,55 +138,12 @@ class ImportPipeline:
             local_hidden_col=target.hidden_column,
             id_prefix=target.id_prefix,
         )
-        strategy = self.preset.diff_strategy
-        if strategy == "auto":
-            # One count job over the NARROW state (id/version/hidden —
-            # Catalyst prunes the scan) decides the plan. Worth a probe
-            # job because AQE can never broadcast-convert the full-outer
-            # plan itself (diff.py header); the guard counts in run()
-            # trigger jobs anyway, so a sync was never zero-job.
-            n = local.count()
-            strategy = (
-                "broadcast" if n <= self.preset.auto_broadcast_rows else "full"
-            )
-        if strategy == "incremental":
-            # The deferred-dedup wide branch re-runs last-wins dedup on
-            # the changed slice, so its winner must provably match the
-            # winner that drove the narrow update decision — only a
-            # DETERMINISTIC total order guarantees that. Without an
-            # order_attribute both dedups would use independent
-            # monotonically_increasing_id instances, which Spark
-            # re-evaluates per plan branch (review finding: a duplicate
-            # id could update on v=9 but write the v=5 attributes), so
-            # fall back to re-joining the already-deduped frame.
-            wide = worder = None
-            if (
-                self.preset.data_processor is None
-                and self.preset.order_attribute
-            ):
-                wide = self.preset.load(self.spark, dedup=False).df
-                worder = F.col(self.preset.order_attribute)
-            return incremental_changes(
-                records.df,
-                local,
-                wide_source=wide,
-                wide_order_by=worder,
-                **common,
-            )
-        return compute_changes(
-            records.df,
-            local,
-            broadcast_local=(
-                strategy == "broadcast" or self.preset.force_broadcast_state
-            ),
-            **common,
-        )
 
     def explain(self, force_updates: bool = False) -> str:
         """Formatted physical plan of the diff, without executing it —
         the preflight a pipeline operator reads before pointing a new
         preset at a 100 TB target (are the scans pruned? which side
-        shuffles? did the broadcast hint take?)."""
+        shuffles?)."""
         cdc = self._apply_mapping(self.compute_changes(force_updates))
         mode = self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
@@ -229,9 +178,7 @@ class ImportPipeline:
 
             counts = {
                 row[CHANGE_TYPE_COL]: row["n"]
-                for row in cdc.groupBy(CHANGE_TYPE_COL)
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
+                for row in changeset_counts(cdc).collect()
             }
             added = counts.get(ChangeType.ADD, 0)
             updated = counts.get(ChangeType.UPDATE, 0)
@@ -375,9 +322,7 @@ class ImportPipeline:
         mapper = self.preset.mapper
         if mapper is None:
             return cdc
-        keep = [c for c in (ID_COL, VERSION_COL, CHANGE_TYPE_COL) if c in cdc.columns]
-        keep += [c for c in cdc.columns if c.startswith("_local_")]
-        return mapper.apply(cdc, keep=keep)
+        return mapper.apply_changes(cdc)
 
     # -- prune (ImportService::removeAllData) ---------------------------- #
     def remove_all(self) -> int:

@@ -35,8 +35,9 @@ Config shape (YAML or dict)::
 from __future__ import annotations
 
 import importlib
+import warnings
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -85,13 +86,14 @@ _PRESET_OPTIONS = (
     .has("skipAddedRecords", "boolean")
     .has("skipRemovedRecords", "boolean")
     .has("dataProcessor", "callable")
+    .has("qualityChecks", "array")
+    # Ignored since the diff has one plan (one full-outer join); still
+    # type-checked so old preset files keep loading, with a warning.
     .has("forceBroadcastState", "boolean")
     .has("diffStrategy", "string")
     .has("autoBroadcastRows", "integer")
-    .has("qualityChecks", "array")
 )
-
-DIFF_STRATEGIES = ("full", "broadcast", "incremental", "auto")
+_IGNORED_OPTIONS = ("forceBroadcastState", "diffStrategy", "autoBroadcastRows")
 
 
 @dataclass
@@ -109,38 +111,14 @@ class Preset:
     skip_added: bool = False
     skip_removed: bool = False
     data_processor: Callable[[DataFrame], DataFrame] | None = None
-    force_broadcast_state: bool = False
-    # Physical diff plan: "full" = one full-outer join (default),
-    # "broadcast" = split 3-join plan for small target keysets (alias of
-    # forceBroadcastState), "incremental" = narrow (_id,_version) diff +
-    # broadcast late materialization for mostly-unchanged syncs
-    # (operators/diff.py:incremental_changes), "auto" = probe the narrow
-    # target keyset size at plan time and pick broadcast under
-    # auto_broadcast_rows, else full. All produce the identical
-    # ChangeSet — this picks a plan, never semantics.
-    diff_strategy: str = "full"
-    # "auto" threshold: a narrow (id, version, hidden) row is ~50 bytes,
-    # so the default 2M rows ≈ 100 MB build side — comfortably inside a
-    # typical executor broadcast budget. Why Spark can't do this itself:
-    # AQE broadcast-converts inner/semi/anti joins but never FULL OUTER
-    # (see operators/diff.py header), so the choice between the
-    # full-outer plan and the split broadcast plan has to happen before
-    # planning — exactly what this probe does.
-    auto_broadcast_rows: int = 2_000_000
     # Declarative data-quality preflight (operators/quality_checks.py):
     # evaluated over the keyed record frame (source attribute names plus
     # _id/_version) before the diff; any failed constraint aborts the
     # run with every violation named — one extra aggregate job per sync
     quality_checks: list | None = None
 
-    def load(
-        self, spark: SparkSession, dedup: bool = True
-    ) -> RecordFrame:
-        """Extract + key + process (``Preset::load``, ``Preset.php:41-52``).
-
-        ``dedup=False`` (incremental diff's wide branch) defers K1
-        last-wins dedup — only valid without a dataProcessor, whose
-        ``map`` re-keys and therefore forces dedup anyway."""
+    def load(self, spark: SparkSession) -> RecordFrame:
+        """Extract + key + process (``Preset::load``, ``Preset.php:41-52``)."""
         raw = self.source.load(spark)
         if self.mapper is not None and self.data_processor is None:
             # Mapping-aware pruning: project to the columns the mapping
@@ -161,7 +139,6 @@ class Preset:
             id_attribute=self.id_attribute,
             version_attribute=self.version_attribute,
             order_by=order,
-            dedup=dedup or self.data_processor is not None,
         )
         if self.data_processor is not None:
             rf = rf.map(self.data_processor)
@@ -256,13 +233,12 @@ class PresetRegistry:
         processor_ref = options.get("dataProcessor")
         processor = resolve_processor(processor_ref) if processor_ref else None
 
-        strategy = options.get(
-            "diffStrategy",
-            "broadcast" if options.get("forceBroadcastState") else "full",
-        )
-        if strategy not in DIFF_STRATEGIES:
-            raise ConfigurationError(
-                f'Unknown diffStrategy "{strategy}"; one of {DIFF_STRATEGIES}'
+        ignored = [key for key in _IGNORED_OPTIONS if key in options]
+        if ignored:
+            warnings.warn(
+                f'Preset "{name}": option(s) {", ".join(ignored)} ignored — '
+                "the diff always uses one full-outer join",
+                stacklevel=2,
             )
 
         return Preset(
@@ -276,11 +252,6 @@ class PresetRegistry:
             skip_added=bool(options.get("skipAddedRecords", False)),
             skip_removed=bool(options.get("skipRemovedRecords", False)),
             data_processor=processor,
-            force_broadcast_state=strategy == "broadcast",
-            diff_strategy=strategy,
-            auto_broadcast_rows=int(
-                options.get("autoBroadcastRows", 2_000_000)
-            ),
             quality_checks=(
                 quality_checks_from_config(options["qualityChecks"])
                 if options.get("qualityChecks")

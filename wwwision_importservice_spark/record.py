@@ -98,7 +98,6 @@ class RecordFrame:
         version_attribute: str | None = None,
         order_by: str | Column | None = None,
         strict: bool = True,
-        dedup: bool = True,
     ) -> "RecordFrame":
         """Key a raw DataFrame by ``id_attribute``.
 
@@ -113,14 +112,6 @@ class RecordFrame:
           LongType (``DataVersion.php:48-70``); missing column →
           ConfigurationError (``DataRecords.php:36-38``); NULL value →
           unversioned (NULL).
-        - ``dedup=False`` defers the last-wins dedup: the frame is keyed
-          (``_id``/``_version`` attached) but may still carry duplicate
-          ids, and the CALLER must restore the invariant before any
-          keyed op. Exists for plans that can filter before deduping —
-          e.g. ``incremental_changes(wide_source=...)`` broadcast-
-          prunes the wide rows to the changed slice first, so the K1
-          dedup shuffle moves from 100% of the wide data to the few
-          percent that changed.
         """
         if id_attribute not in df.columns:
             raise ConfigurationError(
@@ -148,10 +139,9 @@ class RecordFrame:
                 VERSION_COL, version_expr(F.col(version_attribute), vtype, strict=strict)
             )
 
-        if dedup:
-            if order_by is None:
-                order_by = F.monotonically_increasing_id()
-            out = dedup_last_wins(out, ID_COL, order_by)
+        if order_by is None:
+            order_by = F.monotonically_increasing_id()
+        out = dedup_last_wins(out, ID_COL, order_by)
         return cls(out, versioned=versioned)
 
     @classmethod

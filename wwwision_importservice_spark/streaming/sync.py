@@ -30,11 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 
 from wwwision_importservice_spark.mapping import Mapper
-from wwwision_importservice_spark.operators.diff import (
-    CHANGE_TYPE_COL,
-    compute_changes,
-)
-from wwwision_importservice_spark.record import ID_COL, VERSION_COL, RecordFrame
+from wwwision_importservice_spark.operators.diff import compute_changes
+from wwwision_importservice_spark.record import RecordFrame
 from wwwision_importservice_spark.sinks.base import DataTarget
 
 
@@ -141,9 +138,7 @@ def stream_sync(
             broadcast_source=broadcast_batch and skip_removed,
         )
         if mapper is not None:
-            keep = [c for c in (ID_COL, VERSION_COL, CHANGE_TYPE_COL) if c in cdc.columns]
-            keep += [c for c in cdc.columns if c.startswith("_local_")]
-            cdc = mapper.apply(cdc, keep=keep)
+            cdc = mapper.apply_changes(cdc)
         # Pin the ChangeSet BEFORE mutating the target: apply() evaluates the
         # frame several times (adds count, append, updates, deletes), and for
         # targets with a lazy current_state (e.g. JdbcTarget reads the target
