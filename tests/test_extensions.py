@@ -3362,6 +3362,43 @@ def test_cap_per_group_caps_and_is_append_stable(spark):
     assert "WindowGroupLimit" in plan, plan
 
 
+@pytest.mark.parametrize("seed", [11, 12, 13])
+def test_minhash_inline_equals_exploded_signatures(spark, seed):
+    """``minhash_signatures_inline`` equals ``minhash_signatures`` over
+    the exploded, non-distinct hashed shingles, row for row: the min
+    over a document's gram multiset is the min over its distinct set.
+    Random corpora with repeated grams, documents shorter than ``n``
+    words, a one-word document and an empty string."""
+    import random
+
+    from wwwision_importservice_spark.operators.dedup import (
+        hashed_word_shingles,
+        minhash_signatures_inline,
+    )
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(6)]
+    texts = [" ".join(rng.choices(vocab, k=rng.randint(1, 25))) for _ in range(40)]
+    texts += ["two words", "one", ""]
+    frame = docs(spark, list(enumerate(texts)))
+
+    def by_id(df):
+        return {
+            r["doc_id"]: tuple(r[f"h{i}"] for i in range(16)) for r in df.collect()
+        }
+
+    inline = by_id(minhash_signatures_inline(frame, "doc_id", "text", n=3, num_hashes=16))
+    exploded = by_id(
+        minhash_signatures(
+            hashed_word_shingles(frame, "doc_id", "text", n=3, distinct=False),
+            "doc_id",
+            num_hashes=16,
+        )
+    )
+    assert len(inline) == len(texts)
+    assert inline == exploded
+
+
 def test_incremental_lsh_pairs_equals_one_shot(spark):
     """The incremental-index contract: batch-1 pairs ∪ incremental
     (batch-2 vs batch-1 index) must equal the one-shot pairs over the

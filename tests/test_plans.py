@@ -633,3 +633,190 @@ def test_registry_plan_sizes_stay_bounded(spark, sf_dir):
         if size >= 64_000:
             over[name] = size
     assert not over, f"plan explain size over budget: {over}"
+
+
+def test_minhash_inline_builds_gram_array_once(spark):
+    """X2: the gram-hash array is its own projection, referenced by all
+    16 ``h_i`` columns. ``transform`` is interpreted in Spark 4.1, so an
+    inline gram expression would rebuild the array once per ``h_i``;
+    the optimized plan must hold exactly one ``sequence(``."""
+    from wwwision_importservice_spark.operators.dedup import minhash_signatures_inline
+
+    docs = spark.range(4).select(
+        F.col("id").alias("doc_id"), F.lit("a b c d e").alias("text")
+    )
+    sigs = minhash_signatures_inline(docs, "doc_id", "text", n=3, num_hashes=16)
+    plan = sigs._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("sequence(") == 1, plan
+    assert plan.count("array_min(") == 16, plan
+
+
+def python_rdd_scans(df) -> list[str]:
+    """Lineages of the frame's RDD scans (``Scan ExistingRDD``) that run
+    a Python worker: a ``createDataFrame`` over Python rows plans a scan
+    over a ``PythonRDD``. Scans of a ``localCheckpoint`` are JVM RDDs
+    and are not listed."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    lineages = [
+        leaf.rdd().toDebugString()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+    ]
+    return [lineage for lineage in lineages if "PythonRDD" in lineage]
+
+
+@pytest.mark.parametrize(
+    "id_type, ids",
+    [("bigint", list(range(1, 10))), ("string", [f"d{i}" for i in range(1, 10)])],
+)
+def test_connected_components_driver_labels_are_local_relation(spark, id_type, ids):
+    """The driver union-find's labels reach Spark as one Arrow table: a
+    ``LocalTableScan`` typed like the node ids, and no scan of the
+    result starts a Python worker."""
+    from pyspark.sql.types import StructField, StructType
+
+    from wwwision_importservice_spark.operators.dedup import connected_components
+    from wwwision_importservice_spark.session import local_frame
+
+    nodes = local_frame(spark, f"id {id_type}", [(i,) for i in ids])
+    pairs = local_frame(
+        spark,
+        f"id_a {id_type}, id_b {id_type}",
+        [(ids[0], ids[1]), (ids[1], ids[2]), (ids[4], ids[5])],
+    )
+    id_field = nodes.schema["id"].dataType
+    for closed in (False, True):
+        stats: dict = {}
+        out = connected_components(
+            nodes, pairs, stats=stats, edges_within_nodes=closed, pairs_distinct=True
+        )
+        assert stats["strategy"] == "driver-union-find"
+        assert out.schema == StructType(
+            [StructField("id", id_field), StructField("cluster_id", id_field)]
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"LocalTableScan \[id#\d+L?, cluster_id#\d+L?\]", plan), plan
+        assert python_rdd_scans(out) == [], plan
+        labels = {r["id"]: r["cluster_id"] for r in out.collect()}
+        assert labels == {
+            **{i: i for i in ids},
+            ids[1]: ids[0], ids[2]: ids[0], ids[5]: ids[4],
+        }
+
+
+def _empty_parquet_state(spark, tmp_path):
+    from wwwision_importservice_spark.sinks.parquet import ParquetTarget
+
+    target = ParquetTarget(str(tmp_path / "missing"), hidden_column="hidden")
+    return target.current_state(spark)
+
+
+def _empty_scd2_state(spark, tmp_path):
+    from wwwision_importservice_spark.sinks.scd2 import Scd2ParquetTarget
+
+    return Scd2ParquetTarget(str(tmp_path / "missing")).history(spark)
+
+
+def _empty_topk(spark, tmp_path):
+    from wwwision_importservice_spark.operators.similarity import cosine_topk_blocked
+    from wwwision_importservice_spark.session import local_frame
+
+    queries = local_frame(spark, "q_id bigint, embedding array<double>")
+    corpus = local_frame(
+        spark, "c_id string, embedding array<double>", [("c0", [1.0, 0.0])]
+    )
+    return cosine_topk_blocked(queries, corpus, k=2)
+
+
+@pytest.mark.parametrize(
+    "build, schema",
+    [
+        (_empty_parquet_state, "struct<id:string,version:bigint,hidden:boolean>"),
+        (
+            _empty_scd2_state,
+            "struct<id:string,version:bigint,valid_from:bigint,"
+            "valid_to:bigint,is_current:boolean>",
+        ),
+        (
+            _empty_topk,
+            "struct<q_id:bigint,c_id:string,score:double,rank:int>",
+        ),
+    ],
+    ids=["parquet_current_state", "scd2_history", "cosine_topk_blocked"],
+)
+def test_empty_frames_are_local_relations(spark, tmp_path, build, schema):
+    """Empty driver-side frames plan a ``LocalTableScan``, never a scan
+    over a ``PythonRDD`` (which starts Python workers even for zero
+    rows), and keep their schema: names, types, all nullable."""
+    df = build(spark, tmp_path)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+    assert df.schema.simpleString() == schema
+    assert all(f.nullable for f in df.schema.fields if f.name != "rank")
+    assert df.collect() == []
+
+
+def test_near_dup_gate_bootstrap_index_is_local_relation(spark, tmp_path, monkeypatch):
+    """The streaming gate's first batch joins against an empty index
+    that is a ``LocalTableScan`` with the index schema, not a scan over
+    a ``PythonRDD``."""
+    import wwwision_importservice_spark.streaming.neardup as nd
+    from wwwision_importservice_spark.session import local_frame
+
+    index_sides: list = []
+    real = nd.incremental_pairs_from_buckets
+
+    def spy(buckets, idx_hit, *args, **kwargs):
+        index_sides.append(idx_hit)
+        return real(buckets, idx_hit, *args, **kwargs)
+
+    monkeypatch.setattr(nd, "incremental_pairs_from_buckets", spy)
+    batch = local_frame(
+        spark,
+        "doc_id bigint, text string",
+        [(0, "alpha beta gamma delta"), (1, "alpha beta gamma delta")],
+    )
+    admitted: list = []
+    gate = nd.near_dup_gate(
+        str(tmp_path / "idx"),
+        lambda df, _: admitted.extend(r["doc_id"] for r in df.collect()),
+        n=3,
+    )
+    gate(batch, 0)
+    assert admitted == [0]
+    [idx_hit] = index_sides
+    plan = idx_hit._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan, plan
+    assert idx_hit.schema.simpleString() == "struct<doc_id:bigint,band:int,sig:string>"
+
+
+def test_no_python_row_frames_in_dedup_sinks_streaming():
+    """Source guard: in ``operators/dedup.py``, ``sinks/`` and
+    ``streaming/`` no ``createDataFrame`` is called on a list or tuple
+    literal or a list comprehension. Such a frame is a scan over a
+    ``PythonRDD`` that starts Python workers; driver-side rows go
+    through ``session.local_frame`` instead."""
+    import ast
+    import pathlib
+
+    import wwwision_importservice_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    files = [root / "operators" / "dedup.py"]
+    files += sorted((root / "sinks").glob("*.py"))
+    files += sorted((root / "streaming").glob("*.py"))
+    offenders = []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                continue
+            data = node.args[:1] + [k.value for k in node.keywords if k.arg == "data"]
+            if any(isinstance(d, (ast.List, ast.Tuple, ast.ListComp)) for d in data):
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert len(files) > 3
+    assert offenders == [], offenders

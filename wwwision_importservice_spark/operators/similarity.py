@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from wwwision_importservice_spark.session import local_frame
+
 
 #: ceiling on the |Q|·|C| scored-pair count :func:`cosine_topk` will
 #: materialize through its cross join. 2e8 pairs ≈ a few GiB of scored
@@ -211,7 +213,7 @@ def cosine_topk_blocked(
 
     if not q_rows:
         return (
-            corpus.sparkSession.createDataFrame([], out_schema)
+            local_frame(corpus.sparkSession, out_schema)
             .withColumn("rank", F.lit(1).cast("int"))
             .limit(0)
         )

@@ -9,8 +9,12 @@ partitioning). On a real cluster the same config applies — only
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 
 def get_spark(
@@ -80,3 +84,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, schema: StructType | str, rows: Iterable[tuple] = ()
+) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema`` order),
+    handed to Spark as one Arrow table typed by ``schema`` (a
+    ``StructType`` or DDL string; names, types and nullability are kept).
+
+    Spark plans it as a ``LocalTableScan``. ``createDataFrame`` over a
+    Python list plans ``Scan ExistingRDD`` over a ``PythonRDD`` instead,
+    which starts a Python worker per partition even for zero rows."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(column, field.type) for column, field in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

@@ -33,6 +33,7 @@ from wwwision_importservice_spark.operators.diff import CHANGE_TYPE_COL, ChangeT
 from wwwision_importservice_spark.plans.result import Result
 from wwwision_importservice_spark.plans.schema import OptionsSchema
 from wwwision_importservice_spark.record import ID_COL, VERSION_COL
+from wwwision_importservice_spark.session import local_frame
 from wwwision_importservice_spark.sinks.base import ApplyStats, DataTarget
 
 
@@ -95,7 +96,7 @@ class ParquetTarget(DataTarget):
                 cols += f", {self.version_column} long"
             if self.hidden_column:
                 cols += f", {self.hidden_column} boolean"
-            return spark.createDataFrame([], cols)
+            return local_frame(spark, cols)
         keep = [self.id_column]
         if self.version_column and self.version_column in existing.columns:
             keep.append(self.version_column)

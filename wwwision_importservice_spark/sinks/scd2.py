@@ -52,6 +52,7 @@ from wwwision_importservice_spark.operators.diff import CHANGE_TYPE_COL, ChangeT
 from wwwision_importservice_spark.plans.result import Result
 from wwwision_importservice_spark.plans.schema import OptionsSchema
 from wwwision_importservice_spark.record import ID_COL, VERSION_COL
+from wwwision_importservice_spark.session import local_frame
 from wwwision_importservice_spark.sinks.base import ApplyStats, DataTarget
 from wwwision_importservice_spark.sinks.parquet import swap_snapshot
 
@@ -104,7 +105,7 @@ class Scd2ParquetTarget(DataTarget):
                 f", {VALID_FROM_COL} long, {VALID_TO_COL} long,"
                 f" {IS_CURRENT_COL} boolean"
             )
-            return spark.createDataFrame([], cols)
+            return local_frame(spark, cols)
         return existing
 
     def as_of(self, spark: SparkSession, seq: int) -> DataFrame:

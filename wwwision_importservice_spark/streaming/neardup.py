@@ -50,6 +50,7 @@ from wwwision_importservice_spark.operators.dedup import (
     lsh_index,
     minhash_signatures_inline,
 )
+from wwwision_importservice_spark.session import local_frame
 
 _INDEX_SCHEMA = "{id} long, band int, sig string, batch_id long"
 
@@ -221,9 +222,7 @@ def near_dup_gate(
                     "rows": cached["rows"] if cache_hit else None,
                 }
         else:
-            index = spark.createDataFrame(
-                [], _INDEX_SCHEMA.format(id=id_col)
-            )
+            index = local_frame(spark, _INDEX_SCHEMA.format(id=id_col))
             index_files = 0
             bootstrap = True
         # Prune the index ONCE to the buckets this batch touches, and
