@@ -64,12 +64,13 @@ join; timing includes its two bucketed writes), and x5_gopher_quality
 under the same noop-sink materialization — HOFs are CodegenFallback,
 see text.py:gopher_quality_pandas).
 
-Round-9 methodology addition: each headline query's PHYSICAL PLAN
-DIGEST is recorded alongside its timing (plans/fingerprint.py —
-normalized formatted explain of the unexecuted frame, hashed). Equal
-digests across rounds mean the plan did not change and any timing delta
-is environment or data — the adjudication that previously took solo
-re-measures (r7 ask #2, r8 follow-up) is now
+Round-9 set addition: x4_image_decode (real BMP/PNG encode→decode→resize
+round-trip, one Arrow pass, ~0.45s). Round-9 methodology addition: each
+headline query's PHYSICAL PLAN DIGEST is recorded alongside its timing
+(plans/fingerprint.py — normalized formatted explain of the unexecuted
+frame, hashed). Equal digests across rounds mean the plan did not change
+and any timing delta is environment or data — the adjudication that
+previously took solo re-measures (r7 ask #2, r8 follow-up) is now
 `python tools/diff_bench_plans.py BENCH_rA.json BENCH_rB.json`. Digests
 are pinned byte-stable across back-to-back full runs (session-global
 lambda/RDD counters are normalized out; test_plans.py pins it).
@@ -198,10 +199,27 @@ HEADLINE = [
     # the 20-metric Gopher filter suite (single scan, pure expressions)
     "x10_bucketed_join",
     "x5_gopher_quality",
-    # joined round 11: 13-gram decontamination (map-side gram explode +
+    # joined round 9: real image decode + resize (pure-codec BMP/PNG
+    # round-trip under the md5-arithmetic oracle, one Arrow pass)
+    "x4_image_decode",
+    # joined round 10: baseline JPEG encode→decode (Huffman entropy +
+    # IDCT per block, the heaviest per-byte codec work in the family —
+    # same one-Arrow-pass shape as x4_image_decode)
+    "x4_jpeg_decode",
+    # joined round 11: FLAC encode→decode (Rice entropy + stereo
+    # decorrelation, the audio twin of x4_jpeg_decode's Arrow-pass
+    # shape) and 13-gram decontamination (map-side gram explode +
     # broadcast semi-join — the shape whose only shuffle is the
     # contaminated-id distinct)
+    "x4_flac_decode",
     "x2_ngram_decontaminate",
+    # NOT headlined: x4_media_metadata (the fifteen-container routing
+    # pass, a DRIVER row since r13) measured 12.3s at sf0.1 of which
+    # ~95% is the FIXTURE synthesizing a real container encoding per
+    # doc — benching it would blur the round-over-round total with
+    # encode cost the operator never pays on real data; its
+    # correctness runs under the driver hash and the codecs' own rows
+    # stay headlined.
 ]
 
 

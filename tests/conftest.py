@@ -43,6 +43,7 @@ SLOW_TESTS = {
     "tests/test_extensions.py::test_ivf_pq_index_full_probe_equals_pq_scan",
     "tests/test_extensions.py::test_ivf_pq_rerank_full_probe_equals_in_query",
     "tests/test_extensions.py::test_kmeans_matches_python_model",
+    "tests/test_extensions.py::test_multimodal_sizing_file_sample_bounded_and_unbiased",
     "tests/test_extensions.py::test_pq_adc_and_rerank_recall_vs_exact",
     "tests/test_extensions.py::test_pq_encode_shape_and_determinism",
     "tests/test_extensions.py::test_single_writer_guard_on_persisted_state",
@@ -105,3 +106,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def mutate_blob(rng, base: bytes) -> bytes:
+    """Shared codec-fuzz mutator: one of byte flips (1-4), truncation,
+    or garbage insertion (1-8 bytes) — used by the image-family and WAV
+    error-contract fuzz tests so the mutation model can't drift between
+    them."""
+    blob = bytearray(base)
+    op = rng.randrange(3)
+    if op == 0:
+        for _ in range(rng.randint(1, 4)):
+            blob[rng.randrange(len(blob))] = rng.randrange(256)
+    elif op == 1:
+        blob = blob[: rng.randrange(1, len(blob))]
+    else:
+        pos = rng.randrange(len(blob))
+        blob[pos:pos] = bytes(
+            rng.randrange(256) for _ in range(rng.randint(1, 8))
+        )
+    return bytes(blob)

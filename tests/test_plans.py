@@ -575,6 +575,20 @@ def test_normalize_plan_strips_ids_paths_keeps_shape():
     assert "   +- Exchange ()" in norm
 
 
+def test_x4_image_decode_is_one_arrow_pass(spark, sf_dir):
+    """Real decode+resize rides ONE Arrow kernel over one scan; the
+    only exchange is the fixture-width RoundRobin spread (no key-based
+    shuffle — per-image work has no grouping)."""
+    from wwwision_importservice_spark.entry_queries import x4_image_decode
+
+    plan = plan_of(spark, x4_image_decode(spark, sf_dir))
+    tree = tree_of(plan)
+    assert len(re.findall(r"Scan parquet", tree)) == 1, tree
+    assert len(re.findall(r"MapInPandas", tree)) == 1, tree
+    assert "hashpartitioning" not in plan.lower(), plan
+    assert "BatchEvalPython" not in tree, tree
+
+
 def test_plan_digest_immune_to_session_counters(spark, sf_dir):
     """Lambda-variable numbering and localCheckpoint RDD ids come from
     SESSION-GLOBAL counters — the same query must digest identically

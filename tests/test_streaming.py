@@ -629,12 +629,14 @@ def test_probe_inventory(spark):
     behind it that must LIGHT UP when its dependency appears: if this
     test's recorded map ever flips, the corresponding skipped tests and
     NotImplementedError stubs are the first places to revisit."""
+    from wwwision_importservice_spark.operators.multimodal import _HAS_PIL
     from wwwision_importservice_spark.streaming.kafka import kafka_available
     from wwwision_importservice_spark.streaming.stateful import tws_available
 
     gates = {
         "kafka_classpath": kafka_available(spark),
         "tws_protobuf": tws_available(),
+        "pillow": _HAS_PIL,
     }
     print(f"PROBE_INVENTORY {gates}")
     # the map itself must always be computable; individual gates may be

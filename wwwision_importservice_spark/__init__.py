@@ -18,7 +18,7 @@ on Spark DataFrames:
   skip guards, events, prune, and setup preflight
   (reference ``Classes/ImportService.php``, ``Classes/Preset.php``),
 - scale-oriented extension operators: exact/MinHash-LSH/SimHash/n-gram
-  dedup, embedding similarity search, text analysis.
+  dedup, embedding similarity search, text analysis, multimodal plumbing.
 
 Everything relational is plain DataFrame API so Catalyst optimizes it;
 only sources/sinks are hand-written physical code.

@@ -53,10 +53,17 @@ PYTEST_ORACLES: dict[str, str] = {}
 # (new this round / never yet driver-verified) at the front so a future
 # over-budget registration can only evict a long-green query, not a new one.
 _CHECK_FIRST = [
+    "x4_media_metadata",  # PROMOTED r13 (VERDICT r12 ask #3; FIFTEEN
+    # lanes as of r14 — doc_id % 15 — incl. the MP3/ADTS header-walk,
+    # Ogg page-walk, HEIF, WebP, TIFF IFD-walk, AVI RIFF-walk, and FLV
+    # tag-walk arms)
+    "x4_flac_decode",  # NEW r11 (real FLAC decode, compressed-audio gap)
     "x2_ngram_decontaminate",  # NEW r11 (13-gram train/test overlap filter)
     "x6_incremental_curation",  # PROMOTED r11 (VERDICT r10 ask #2)
+    "x4_jpeg_decode",  # NEW r10 (baseline JPEG per VERDICT r9 ask #8)
     "x6_bpe_pack",  # NEW r10 (tokenizer-true packing per VERDICT r9 ask #3)
     "x6_curation_pipeline",  # PROMOTED r10 (VERDICT r9 ask #2)
+    "x4_image_decode",  # NEW r9 (real in-sandbox decode per VERDICT r8 #3)
     "x6_packed_shards_manifest",  # NEW r9 (driver-pinned per VERDICT r8 #5)
     "x5_gopher_quality",  # NEW r8
     "x10_bucketed_join",  # NEW r8
@@ -296,7 +303,17 @@ def j2_added(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _only(spark, sf_dir, "add")
 
 
-@_register("j3_updated", _cdc_sql(with_hidden=False, only="update"))
+@_register(
+    "j3_updated",
+    _cdc_sql(with_hidden=False, only="update"),
+    driver=False,  # demoted r13 (driver-green r01-r12, slot ceded to
+    # x4_media_metadata): like j1/j2 before it (r5), this is a pure
+    # change_type filter of j4_changeset's CDC frame — j4 stays
+    # driver-checked and its rows carry the same four-branch update
+    # predicate, so driver-side value coverage of the update class is
+    # unchanged; the predicate branches keep their dedicated oracle
+    # here and in j3_force_updates (both pytest tier)
+)
 def j3_updated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J3 — versioned inner join with the four-branch update predicate."""
     return _only(spark, sf_dir, "update")
@@ -839,6 +856,10 @@ SELECT l_returnflag,
        count(*) AS n_rows
 FROM lineitem GROUP BY l_returnflag
 """,
+    driver=False,  # long-green since r2; slot ceded to x4_image_decode
+    # (r9 — VERDICT r8 ask #3). The A3 surface keeps agg_q1_lineitem,
+    # agg_rollup_orders, win_topk and join_q3/q5 driver rows; this exact
+    # oracle still runs in the pytest tier.
 )
 def a3_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 — exact interpolated percentiles per group (the hash-checkable
@@ -1811,6 +1832,10 @@ SELECT q_id, c_id, score, rank FROM (
   )
 ) WHERE rank <= 5
 """,
+    driver=False,  # demoted r11 (driver-green r07-r10, slot ceded to
+    # x4_flac_decode): ANN stays driver-covered by x3_ann_ivf_persisted
+    # + x3_cosine_topk; this multi-probe variant keeps the identical
+    # oracle here and its recall floor in test_extensions.py
 )
 def x3_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3 — ANN variant: sign-LSH bucketing with MULTI-PROBE (the query
@@ -4371,6 +4396,1352 @@ def x5_hashing_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents", spread=True)
     return hashed_tf(docs, "doc_id")
+
+
+# --------------------------------------------------------------------------- #
+# X4: multimodal plumbing (rows-only check: Pandas-UDF decode path)
+# --------------------------------------------------------------------------- #
+
+@_register(
+    "x4_multimodal_meta",
+    """
+SELECT doc_id,
+       octet_length(encode(text)) AS n_bytes,
+       sha256(text) AS content_sha,
+       (64 + ((instr('0123456789abcdef', substr(md5(text), 1, 1)) - 1) * 16
+              + instr('0123456789abcdef', substr(md5(text), 2, 1)) - 1) % 192)::INT AS width,
+       (64 + ((instr('0123456789abcdef', substr(md5(text), 3, 1)) - 1) * 16
+              + instr('0123456789abcdef', substr(md5(text), 4, 1)) - 1) % 192)::INT AS height,
+       'fake' AS format
+FROM documents
+""",
+    driver=False,  # long-green since r3; slot ceded to x6_dsir_select (r8).
+    # x4_frame_sample keeps the X4 Arrow-batched decode path driver-covered;
+    # same oracle, pytest tier
+)
+def x4_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — binary media plumbing: text bytes stand in for media blobs;
+    metadata extraction runs through the Arrow-batched mapInPandas decode
+    path (deterministic fake decoder — the real one is gated on Pillow)."""
+    from wwwision_importservice_spark.operators.multimodal import (
+        attach_blob,
+        decode_metadata,
+    )
+
+    docs = load(spark, sf_dir, "documents")
+    blobs = attach_blob(docs, "doc_id", "text")
+    return decode_metadata(blobs, "doc_id")
+
+
+@_register(
+    "x4_audio_windows",
+    """
+SELECT doc_id, CAST(i AS INT) AS window_index,
+       CAST(i * 32 AS BIGINT) AS byte_off,
+       round(CAST(i * 32 AS DOUBLE) / 32000, 6) AS start_s,
+       length(substr(hex(encode(text)), CAST(i * 64 + 1 AS INT), 64)) // 2 AS n_bytes,
+       sha256(substr(hex(encode(text)), CAST(i * 64 + 1 AS INT), 64)) AS window_sha
+FROM documents,
+     unnest(range(0, greatest(CAST(ceil(octet_length(encode(text)) / 32.0) AS BIGINT), 1)))
+       AS t(i)
+""",
+    driver=False,
+)
+def x4_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — audio time-window segmentation: sample-rate metadata → byte
+    ranges → binary substring + sha256 content address, entirely in
+    whole-stage codegen (no Python; the byte math needs no decoder).
+    Parameters chosen so one window = 32 bytes = 1 ms at 16 kHz s16:
+    ``operators/multimodal.py:audio_windows``."""
+    from wwwision_importservice_spark.operators.multimodal import (
+        attach_blob,
+        audio_windows,
+    )
+
+    docs = load(spark, sf_dir, "documents", spread=True)
+    blobs = attach_blob(docs, "doc_id", "text")
+    return audio_windows(
+        blobs, "doc_id", sample_rate=16000, bytes_per_sample=2, window_s=0.001
+    )
+
+
+@_register(
+    "x4_wav_windows",
+    # the oracle PREDICTS, from md5 arithmetic alone, the exact sample
+    # bytes every window of a REAL WAV file must carry after encode →
+    # decode: n = 40 + md5_60(doc_id) % 100 frames of int16 pattern at
+    # 8 kHz, 0.005 s windows = 40 frames = 160 hex chars each. A hash
+    # match proves the RIFF layout, the header-derived sample rate, the
+    # frame slicing, and the int16-LE byte identity cross-engine — the
+    # audio twin of x4_image_decode's pixel proof.
+    f"""
+SELECT doc_id, CAST(i AS INT) AS window_index,
+       CAST(i * 5 AS BIGINT) AS start_ms,
+       CAST(least(40, n - i * 40) AS INT) AS n_samples,
+       CAST(8000 AS INT) AS sample_rate,
+       sha256(substr(pat, CAST(i * 160 + 1 AS INT),
+                     CAST(least(40, n - i * 40) * 4 AS INT))) AS window_sha
+FROM (
+  SELECT doc_id,
+         40 + {_H60("CAST(doc_id AS VARCHAR)")} % 100 AS n,
+         repeat(md5(CAST(doc_id AS VARCHAR)), 18) AS pat
+  FROM documents
+), unnest(range(0, CAST(ceil(n / 40.0) AS BIGINT))) AS t(i)
+""",
+    driver=False,
+)
+def x4_wav_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — REAL audio decode + windowing under a byte-exact oracle
+    (``operators/audiocodec.py``, ``operators/multimodal.py:
+    audio_windows_wav``): per document, a deterministic int16 PCM
+    signal (the doc-id's md5 digest cycled over an md5-derived frame
+    count) is encoded to an actual RIFF WAV file, decoded back through
+    the pure-stdlib codec — sample rate read from the HEADER, not
+    caller metadata — sliced into 0.005 s windows, and each window's
+    samples content-addressed. The oracle recomputes every window hash
+    from md5 string arithmetic alone. Same scale shape as
+    x4_image_decode: one Arrow pass over a doc_id projection,
+    per-file CPU, no shuffle."""
+    from wwwision_importservice_spark.operators.multimodal import (
+        _codec_importer,
+        audio_windows_wav,
+    )
+
+    docs = load(spark, sf_dir, "documents", spread=True).select("doc_id")
+    import_codec = _codec_importer("audiocodec")
+
+    def synth(it):
+        import hashlib as _hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        codec = import_codec()
+        for pdf in it:
+            rows = []
+            for did in pdf["doc_id"]:
+                did = int(did)
+                mh = _hashlib.md5(str(did).encode()).hexdigest()
+                n = 40 + int(mh[:15], 16) % 100
+                samples = np.frombuffer(
+                    bytes.fromhex((mh * 18)[: 4 * n]), dtype="<i2"
+                )
+                rows.append((did, bytearray(codec.encode_wav(samples, 8000))))
+            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
+
+    blobs = docs.mapInPandas(synth, schema="doc_id long, blob binary")
+    return audio_windows_wav(blobs, "doc_id", window_s=0.005)
+
+
+@_register(
+    "x4_frame_sample_real",
+    # every 2nd frame of a REAL multi-frame container: the stream is
+    # 2 + md5_60(doc_id)%5 standalone PNG files back to back, frame j's
+    # 4x3 pixels are md5(doc_id:j) cycled; the sampler must chunk-walk
+    # frame boundaries, really decode the sampled frames, and recover
+    # exactly the predicted pixels.
+    f"""
+SELECT doc_id, CAST(j AS INT) AS frame_index,
+       CAST(4 AS INT) AS width, CAST(3 AS INT) AS height,
+       sha256(substr(repeat(md5(CAST(doc_id AS VARCHAR) || ':' ||
+                                CAST(j AS VARCHAR)), 3), 1, 72)) AS frame_sha
+FROM (
+  SELECT doc_id, 2 + {_H60("CAST(doc_id AS VARCHAR)")} % 5 AS nf
+  FROM documents
+), unnest(range(0, nf)) AS t(j)
+WHERE j % 2 = 0
+""",
+    driver=False,
+)
+def x4_frame_sample_real(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — REAL frame sampling from a real multi-frame container
+    (``operators/multimodal.py:sample_frames_png_stream``): per
+    document, 2-6 actual PNG files (4x3, md5-derived pixels) are
+    concatenated MJPEG-style; the sampler splits the stream by
+    chunk-walking each frame to its IEND (magic-scanning would
+    false-positive inside zlib bodies), decodes every 2nd frame for
+    real, and content-addresses its pixels. The oracle predicts every
+    sampled frame's hash from md5 arithmetic — completing the
+    real-bytes X4 trio (decode/resize: x4_image_decode; audio:
+    x4_wav_windows; frames: this row). One Arrow pass, no shuffle."""
+    from wwwision_importservice_spark.operators.multimodal import (
+        _codec_importer,
+        sample_frames_png_stream,
+    )
+
+    docs = load(spark, sf_dir, "documents", spread=True).select("doc_id")
+    import_codec = _codec_importer()
+
+    def synth(it):
+        import hashlib as _hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        codec = import_codec()
+        for pdf in it:
+            rows = []
+            for did in pdf["doc_id"]:
+                did = int(did)
+                mh = _hashlib.md5(str(did).encode()).hexdigest()
+                nf = 2 + int(mh[:15], 16) % 5
+                stream = b""
+                for j in range(nf):
+                    fh = _hashlib.md5(f"{did}:{j}".encode()).hexdigest()
+                    px = bytes.fromhex((fh * 3)[:72])
+                    arr = np.frombuffer(px, dtype=np.uint8).reshape(3, 4, 3)
+                    stream += codec.encode_png(arr)
+                rows.append((did, bytearray(stream)))
+            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
+
+    blobs = docs.mapInPandas(synth, schema="doc_id long, blob binary")
+    return sample_frames_png_stream(blobs, "doc_id", every_n=2, max_frames=8)
+
+
+@_register(
+    "x4_gif_frames",
+    # ANIMATED GIF through real LZW: 2-5 gray frames per doc on a 4x3
+    # canvas, frame j's 12 gray levels = the first 12 bytes of
+    # md5(doc_id:g:j). Gray pixels (g,g,g) survive the palette round
+    # trip byte-exactly, so the oracle predicts each decoded frame's
+    # RGB hex as every pattern byte TRIPLED — proving the LZW encode →
+    # decode → palette mapping end to end with md5 arithmetic alone.
+    f"""
+SELECT doc_id, CAST(j AS INT) AS frame_index,
+       CAST(4 AS INT) AS width, CAST(3 AS INT) AS height,
+       sha256(array_to_string(list_transform(range(0, 12), k ->
+         repeat(substr(md5(CAST(doc_id AS VARCHAR) || ':g:' ||
+                           CAST(j AS VARCHAR)), CAST(2 * k + 1 AS INT), 2),
+                3)), '')) AS frame_sha
+FROM (
+  SELECT doc_id, 2 + {_H60("CAST(doc_id AS VARCHAR)")} % 4 AS nf
+  FROM documents
+), unnest(range(0, nf)) AS t(j)
+""",
+    driver=False,
+)
+def x4_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — REAL animated-GIF decode under a byte-exact oracle
+    (``operators/imagecodec.py:decode_gif`` — pure-Python GIF-variant
+    LZW with code-width growth and 12-bit table resets, global
+    palettes, extension skipping): per document, 2-5 grayscale frames
+    are encoded into one actual GIF89a file, decoded back, and every
+    frame's pixels content-addressed. The oracle recomputes each hash
+    from md5 string arithmetic (gray bytes tripled to RGB). The fourth
+    real in-sandbox media codec family (BMP/PPM/PNG pixels, WAV
+    samples, PNG-stream frames, GIF animation). Same scale shape: one
+    Arrow pass, per-file CPU, no shuffle."""
+    from wwwision_importservice_spark.operators.multimodal import _codec_importer
+
+    docs = load(spark, sf_dir, "documents", spread=True).select("doc_id")
+    import_codec = _codec_importer()
+    out_schema = (
+        "doc_id long, frame_index int, width int, height int, frame_sha string"
+    )
+
+    def kernel(it):
+        import hashlib as _hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        codec = import_codec()
+        for pdf in it:
+            rows = []
+            for did in pdf["doc_id"]:
+                did = int(did)
+                mh = _hashlib.md5(str(did).encode()).hexdigest()
+                nf = 2 + int(mh[:15], 16) % 4
+                frames = []
+                for j in range(nf):
+                    fh = _hashlib.md5(f"{did}:g:{j}".encode()).hexdigest()
+                    gray = np.frombuffer(
+                        bytes.fromhex(fh[:24]), dtype=np.uint8
+                    ).reshape(3, 4, 1)
+                    frames.append(np.repeat(gray, 3, axis=2))
+                blob = codec.encode_gif(frames)
+                for j, (_off, arr) in enumerate(codec.decode_gif(blob)):
+                    rows.append(
+                        (
+                            did,
+                            j,
+                            arr.shape[1],
+                            arr.shape[0],
+                            _hashlib.sha256(
+                                arr.tobytes().hex().encode()
+                            ).hexdigest(),
+                        )
+                    )
+            yield pd.DataFrame(
+                rows,
+                columns=["doc_id", "frame_index", "width", "height", "frame_sha"],
+            )
+
+    return docs.mapInPandas(kernel, schema=out_schema)
+
+
+@_register(
+    "x4_frame_sample",
+    """
+SELECT doc_id, CAST(i AS INT) AS frame_index, CAST(i * 64 AS BIGINT) AS offset,
+       sha256(substr(hex(encode(text)), CAST(i * 128 + 1 AS INT), 128)) AS frame_sha
+FROM documents,
+     unnest(range(0, least(8, greatest(1, octet_length(encode(text)) // 64)))) AS t(i)
+""",
+    driver=False,  # long-green since r5; slot ceded to x4_jpeg_decode
+    # (r10) — this is the deterministic FAKE byte-window sampler (real
+    # demuxers are out of sandbox scope), while its REAL twin
+    # x4_frame_sample_real already holds the pytest tier; the x4 driver
+    # slots now carry the two REAL decode chains (bmp/png + jpeg)
+)
+def x4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — frame sampling: one media blob fans out to N frame rows
+    through the Arrow batch path (output length ≠ input length in
+    mapInPandas). Deterministic fake: sha256 over each 64-byte window's
+    hex encoding — hex slicing is byte slicing in both engines, so the
+    oracle stays exact on multi-byte text (no ASCII assumption)."""
+    from wwwision_importservice_spark.operators.multimodal import (
+        attach_blob,
+        frame_sample,
+    )
+
+    docs = load(spark, sf_dir, "documents")
+    blobs = attach_blob(docs, "doc_id", "text")
+    return frame_sample(blobs, "doc_id", every_n_bytes=64, max_frames=8)
+
+
+@_register(
+    "x4_image_decode",
+    # The oracle PREDICTS, from pure md5 arithmetic, the exact pixel
+    # bytes the Spark side must recover by really encoding and really
+    # decoding BMP/PNG files (imagecodec.py) — and the exact bytes a
+    # 6x4 nearest-neighbor resize of those pixels must produce (the
+    # floor-index map restated with DuckDB integer //). A hash match
+    # proves the full synthesize → encode → DECODE → RESIZE chain is
+    # byte-faithful, cross-engine, over real image bytes in-sandbox —
+    # no Pillow anywhere (VERDICT r8 ask #3).
+    """
+SELECT doc_id,
+       CAST(4 + b % 12 AS INT) AS width,
+       CAST(4 + b // 12 AS INT) AS height,
+       CASE WHEN doc_id % 2 = 0 THEN 'bmp' ELSE 'png' END AS format,
+       sha256(substr(repeat(mh, 43), 1,
+                     6 * (4 + b % 12) * (4 + b // 12))) AS pixel_sha,
+       sha256(array_to_string(list_transform(range(0, 72), i ->
+         substr(repeat(mh, 43),
+                2 * ((((i // 18) * (4 + b // 12) // 4) * (4 + b % 12)
+                      + ((i % 18) // 3) * (4 + b % 12) // 6) * 3
+                     + (i % 3)) + 1,
+                2)), '')) AS resized_sha
+FROM (
+  SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS mh,
+         CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
+              AS BIGINT) % 144 AS b
+  FROM documents
+)
+""",
+)
+def x4_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — REAL image decode + resize under a byte-exact oracle
+    (``operators/imagecodec.py``, ``operators/multimodal.py:
+    resize_images``): per document, deterministic pixels (the doc-id's
+    md5 digest cycled over a md5-derived WxH canvas) are encoded to an
+    actual BMP (even ids) or PNG (odd ids) file, decoded back through
+    the pure-stdlib codecs, nearest-neighbor-resized to 6x4, and
+    content-addressed — sha256 over the DECODED and RESIZED pixel hex.
+    The oracle recomputes both digests from md5 string arithmetic
+    alone, so the hash match proves the codec round-trip and the
+    resize index map byte-for-byte without any image library.
+
+    Scale shape: ONE Arrow mapInPandas pass over a doc_id projection —
+    per-image CPU, no shuffle, no driver participation; partition
+    count = scan parallelism. The kernel is self-contained (closure
+    convention): the codec module is imported worker-side via a
+    path-by-value fallback (``multimodal._codec_importer``)."""
+    from wwwision_importservice_spark.operators.multimodal import _codec_importer
+
+    docs = load(spark, sf_dir, "documents", spread=True).select("doc_id")
+    import_codec = _codec_importer()
+    out_schema = (
+        "doc_id long, width int, height int, format string, "
+        "pixel_sha string, resized_sha string"
+    )
+
+    def kernel(it):
+        import hashlib as _hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        codec = import_codec()
+        for pdf in it:
+            rows = []
+            for did in pdf["doc_id"]:
+                did = int(did)
+                mh = _hashlib.md5(str(did).encode()).hexdigest()
+                b = int(mh[:15], 16) % 144
+                w, h = 4 + b % 12, 4 + b // 12
+                pat = bytes.fromhex((mh * 43)[: 6 * w * h])
+                arr = np.frombuffer(pat, dtype=np.uint8).reshape(h, w, 3)
+                blob = (codec.encode_bmp if did % 2 == 0 else codec.encode_png)(arr)
+                decoded, fmt = codec.decode_image(blob)
+                small = codec.resize_nearest(decoded, 6, 4)
+                rows.append(
+                    (
+                        did,
+                        decoded.shape[1],
+                        decoded.shape[0],
+                        fmt,
+                        _hashlib.sha256(decoded.tobytes().hex().encode()).hexdigest(),
+                        _hashlib.sha256(small.tobytes().hex().encode()).hexdigest(),
+                    )
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id", "width", "height", "format", "pixel_sha", "resized_sha",
+                ],
+            )
+
+    return docs.mapInPandas(kernel, schema=out_schema)
+
+
+@_register(
+    "x4_jpeg_decode",
+    # The oracle PREDICTS, from md5 arithmetic alone, the exact pixels a
+    # real baseline-JPEG encode→decode must recover — possible for a
+    # LOSSY format because block-constant gray images with EVEN sample
+    # values at quality 50 round-trip exactly (the DC quantizer 16
+    # divides 8·(v-128); every AC and chroma coefficient is exactly
+    # zero — jpegcodec module docstring). Half the docs take 4:2:0, so
+    # the subsampled MCU path (incl. edge padding at odd block counts)
+    # sits under the same hash.
+    """
+SELECT doc_id,
+       CAST(8 * bw AS INT) AS width,
+       CAST(8 * bh AS INT) AS height,
+       'jpeg' AS format,
+       CASE WHEN doc_id % 2 = 0 THEN '444' ELSE '420' END AS subsampling,
+       sha256(array_to_string(list_transform(range(0, (8*bw)*(8*bh)), i ->
+         repeat(printf('%02x',
+                gs[((i // (8*bw)) // 8) * bw + ((i % (8*bw)) // 8) + 1]), 3)),
+         '')) AS pixel_sha
+FROM (
+  SELECT doc_id, bw, bh,
+         list_transform(range(0, bw*bh), k ->
+           (CAST('0x' || substr(mh, 2*k+1, 2) AS INT) % 128) * 2) AS gs
+  FROM (
+    SELECT doc_id, mh, 2 + b % 3 AS bw, 2 + (b // 3) % 3 AS bh
+    FROM (
+      SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS mh,
+             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
+                  AS BIGINT) AS b
+      FROM documents)
+  )
+)
+""",
+    # driver tier since r10 (slot ceded by the fake-window
+    # x4_frame_sample): the lossy-format byte-exact proof belongs under
+    # the hard driver hash alongside x4_image_decode
+)
+def x4_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — REAL baseline-JPEG decode under a byte-exact oracle
+    (``operators/jpegcodec.py``, r10 VERDICT ask #8): per document, a
+    block-constant gray canvas (block values = the doc-id's md5 digest
+    bytes forced even, md5-derived block grid up to 4x4) is encoded to
+    an actual baseline JFIF file — 4:4:4 for even ids, 4:2:0 for odd —
+    decoded back through the pure-stdlib Huffman → dequant → IDCT →
+    color-convert pipeline, and content-addressed. The construction
+    makes the lossy codec exact (see the registered SQL's comment), so
+    the oracle recomputes the digests from md5 arithmetic alone; the
+    general lossy path is pinned by error-bound round-trip tests and
+    the Annex-K spec-published Huffman code pins
+    (``tests/test_jpegcodec.py``).
+
+    Scale shape: ONE Arrow mapInPandas pass over a doc_id projection —
+    per-image CPU, no shuffle, no driver participation; the codec module
+    resolves worker-side via the closure-convention importer."""
+    from wwwision_importservice_spark.operators.multimodal import _codec_importer
+
+    docs = load(spark, sf_dir, "documents", spread=True).select("doc_id")
+    import_codec = _codec_importer("jpegcodec")
+    out_schema = (
+        "doc_id long, width int, height int, format string, "
+        "subsampling string, pixel_sha string"
+    )
+
+    def kernel(it):
+        import hashlib as _hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        codec = import_codec()
+        for pdf in it:
+            rows = []
+            for did in pdf["doc_id"]:
+                did = int(did)
+                mh = _hashlib.md5(str(did).encode()).hexdigest()
+                b = int(mh[:15], 16)
+                bw, bh = 2 + b % 3, 2 + (b // 3) % 3
+                gs = [
+                    (int(mh[2 * k : 2 * k + 2], 16) % 128) * 2
+                    for k in range(bw * bh)
+                ]
+                grid = np.array(gs, np.uint8).reshape(bh, bw)
+                img = np.repeat(np.repeat(grid, 8, 0), 8, 1)
+                arr = np.repeat(img[:, :, None], 3, 2)
+                sub = "444" if did % 2 == 0 else "420"
+                blob = codec.encode_jpeg(arr, quality=50, subsampling=sub)
+                dec = codec.decode_jpeg(blob)
+                rows.append(
+                    (
+                        did, dec.shape[1], dec.shape[0], "jpeg", sub,
+                        _hashlib.sha256(dec.tobytes().hex().encode()).hexdigest(),
+                    )
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id", "width", "height", "format",
+                    "subsampling", "pixel_sha",
+                ],
+            )
+
+    return docs.mapInPandas(kernel, schema=out_schema)
+
+
+@_register(
+    "x4_jpeg_progressive",
+    # Same md5-arithmetic prediction as x4_jpeg_decode — the exact
+    # even-gray q50 construction round-trips through the PROGRESSIVE
+    # process too (DC successive approximation splits even DC values
+    # losslessly; every AC scan is pure EOB runs) — so a real SOF2
+    # multi-scan decode sits under a byte-exact oracle. doc_id % 3
+    # picks the scan script: AC successive approximation (refinement
+    # scans through the G.1.2.3 correction-bit decoder) vs spectral
+    # selection only.
+    """
+SELECT doc_id,
+       CAST(8 * bw AS INT) AS width,
+       CAST(8 * bh AS INT) AS height,
+       'jpeg' AS format,
+       CASE WHEN doc_id % 2 = 0 THEN '444' ELSE '420' END AS subsampling,
+       doc_id % 3 = 0 AS ac_sa,
+       sha256(array_to_string(list_transform(range(0, (8*bw)*(8*bh)), i ->
+         repeat(printf('%02x',
+                gs[((i // (8*bw)) // 8) * bw + ((i % (8*bw)) // 8) + 1]), 3)),
+         '')) AS pixel_sha
+FROM (
+  SELECT doc_id, bw, bh,
+         list_transform(range(0, bw*bh), k ->
+           (CAST('0x' || substr(mh, 2*k+1, 2) AS INT) % 128) * 2) AS gs
+  FROM (
+    SELECT doc_id, mh, 2 + b % 3 AS bw, 2 + (b // 3) % 3 AS bh
+    FROM (
+      SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS mh,
+             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
+                  AS BIGINT) AS b
+      FROM documents)
+  )
+)
+""",
+    driver=False,  # pytest tier: x4_jpeg_decode holds the family's
+    # driver slot; this row extends the same oracle to SOF2 (r11,
+    # VERDICT r10 ask #4)
+)
+def x4_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — REAL progressive-JPEG (SOF2) decode under the same
+    byte-exact oracle as ``x4_jpeg_decode`` (r11, VERDICT r10 ask #4):
+    each document's even-gray canvas is encoded as an actual multi-scan
+    progressive file (interleaved DC first scan at Al=1 → DC refinement
+    → per-component AC scans; one doc in three uses AC successive
+    approximation) and decoded through the Annex-G scan accumulator +
+    shared IDCT. Scale shape identical to x4_jpeg_decode: one Arrow
+    pass, no shuffle."""
+    from wwwision_importservice_spark.operators.multimodal import _codec_importer
+
+    docs = load(spark, sf_dir, "documents", spread=True).select("doc_id")
+    import_codec = _codec_importer("jpegcodec")
+    out_schema = (
+        "doc_id long, width int, height int, format string, "
+        "subsampling string, ac_sa boolean, pixel_sha string"
+    )
+
+    def kernel(it):
+        import hashlib as _hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        codec = import_codec()
+        for pdf in it:
+            rows = []
+            for did in pdf["doc_id"]:
+                did = int(did)
+                mh = _hashlib.md5(str(did).encode()).hexdigest()
+                b = int(mh[:15], 16)
+                bw, bh = 2 + b % 3, 2 + (b // 3) % 3
+                gs = [
+                    (int(mh[2 * k : 2 * k + 2], 16) % 128) * 2
+                    for k in range(bw * bh)
+                ]
+                grid = np.array(gs, np.uint8).reshape(bh, bw)
+                img = np.repeat(np.repeat(grid, 8, 0), 8, 1)
+                arr = np.repeat(img[:, :, None], 3, 2)
+                sub = "444" if did % 2 == 0 else "420"
+                ac_sa = did % 3 == 0
+                blob = codec.encode_jpeg(
+                    arr, quality=50, subsampling=sub,
+                    progressive=True, ac_successive=ac_sa,
+                )
+                dec = codec.decode_jpeg(blob)
+                rows.append(
+                    (
+                        did, dec.shape[1], dec.shape[0], "jpeg", sub, ac_sa,
+                        _hashlib.sha256(dec.tobytes().hex().encode()).hexdigest(),
+                    )
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id", "width", "height", "format",
+                    "subsampling", "ac_sa", "pixel_sha",
+                ],
+            )
+
+    return docs.mapInPandas(kernel, schema=out_schema)
+
+
+@_register(
+    "x4_flac_decode",
+    # FLAC is LOSSLESS, so unlike the JPEG rows no construction trick is
+    # needed: decode(encode(x)) == x for ANY samples, and the oracle
+    # simply re-derives the synthesized sample bytes from md5 string
+    # arithmetic. The Spark side still runs the full entropy pipeline —
+    # fixed/LPC prediction, Rice residuals, stereo decorrelation
+    # (mid/side for even ids, left/side for odd), CRC-8/CRC-16 and the
+    # STREAMINFO sample-MD5 gate — over real compressed bytes.
+    f"""
+SELECT doc_id,
+       CAST(n AS INT) AS n_frames,
+       CAST(2 AS INT) AS channels,
+       CAST(8000 AS INT) AS sample_rate,
+       CASE WHEN doc_id % 2 = 0 THEN 'mid_side' ELSE 'left_side' END AS stereo,
+       sha256(substr(repeat(md5(CAST(doc_id AS VARCHAR)), 30), 1, 8 * n))
+         AS sample_sha
+FROM (
+  SELECT doc_id, 40 + {_H60("CAST(doc_id AS VARCHAR)")} % 80 AS n
+  FROM documents
+)
+""",
+    # DRIVER row (r11, slot ceded by x3_ann_lsh_topk): closes the
+    # compressed-audio scope gap noted in r10's "What's missing" —
+    # real entropy-coded audio under the hard driver hash next to
+    # x4_jpeg_decode and x4_image_decode
+)
+def x4_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — REAL compressed-audio (FLAC) decode under a byte-exact
+    oracle (``operators/flaccodec.py``, r11): per document, 40-119
+    stereo int16 frames (the doc-id's md5 digest bytes cycled) are
+    encoded to an actual FLAC stream — fixed/LPC prediction, Rice
+    residuals, mid/side decorrelation for even ids and left/side for
+    odd, 32-frame blocks so multi-frame sync/CRC paths run — then
+    decoded back through the pure-stdlib codec, which also verifies the
+    STREAMINFO MD5 over the recovered samples. Losslessness makes the
+    round-trip exact, so the oracle recomputes each stream's
+    content-address from md5 arithmetic alone.
+
+    Scale shape: ONE Arrow ``mapInPandas`` pass over a doc_id
+    projection — per-file CPU, no shuffle, no driver participation
+    (same plan family as x4_jpeg_decode)."""
+    from wwwision_importservice_spark.operators.multimodal import _codec_importer
+
+    docs = load(spark, sf_dir, "documents", spread=True).select("doc_id")
+    import_codec = _codec_importer("flaccodec")
+    out_schema = (
+        "doc_id long, n_frames int, channels int, sample_rate int, "
+        "stereo string, sample_sha string"
+    )
+
+    def kernel(it):
+        import hashlib as _hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        codec = import_codec()
+        for pdf in it:
+            rows = []
+            for did in pdf["doc_id"]:
+                did = int(did)
+                mh = _hashlib.md5(str(did).encode()).hexdigest()
+                n = 40 + int(mh[:15], 16) % 80
+                samples = np.frombuffer(
+                    bytes.fromhex((mh * 30)[: 8 * n]), dtype="<i2"
+                ).reshape(n, 2)
+                stereo = "mid_side" if did % 2 == 0 else "left_side"
+                blob = codec.encode_flac(
+                    samples.astype(np.int64), 8000,
+                    stereo=stereo, block_size=32,
+                )
+                dec, rate = codec.decode_flac(blob)
+                rows.append(
+                    (
+                        did, len(dec), dec.shape[1], rate, stereo,
+                        _hashlib.sha256(
+                            dec.astype("<i2").tobytes().hex().encode()
+                        ).hexdigest(),
+                    )
+                )
+            yield pd.DataFrame(
+                rows,
+                columns=[
+                    "doc_id", "n_frames", "channels", "sample_rate",
+                    "stereo", "sample_sha",
+                ],
+            )
+
+    return docs.mapInPandas(kernel, schema=out_schema)
+
+
+@_register(
+    "x4_audio_sniff_windows",
+    # mixed-container corpus under ONE oracle: every doc carries the
+    # SAME md5-derived mono int16 signal, packaged as RIFF WAV for even
+    # ids and FLAC (rice-coded, 32-frame blocks) for odd — so identical
+    # window hashes across containers prove the sniff-dispatch decodes
+    # both losslessly, and the container column pins which codec ran.
+    f"""
+SELECT doc_id,
+       CAST(i AS INT) AS window_index,
+       CAST(5 * i AS BIGINT) AS start_ms,
+       CAST(least(40, n - 40 * i) AS INT) AS n_samples,
+       CAST(8000 AS INT) AS sample_rate,
+       CASE WHEN doc_id % 2 = 0 THEN 'wav' ELSE 'flac' END AS container,
+       sha256(substr(repeat(md5(CAST(doc_id AS VARCHAR)), 18),
+                     1 + 160 * i, least(160, 4 * n - 160 * i))) AS window_sha
+FROM (
+  SELECT doc_id, 40 + {_H60("CAST(doc_id AS VARCHAR)")} % 100 AS n
+  FROM documents
+), unnest(range(0, CAST(ceil(n / 40.0) AS BIGINT))) AS t(i)
+""",
+    driver=False,  # pytest tier: x4_flac_decode carries the FLAC
+    # driver slot; this row pins the mixed-corpus dispatch surface (r11)
+)
+def x4_audio_sniff_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — mixed-container audio windowing
+    (``operators/multimodal.py:audio_windows_any``): per document the
+    same md5-derived int16 signal is packaged as a real WAV (even ids)
+    or a real rice-coded FLAC (odd ids); the kernel sniffs each blob's
+    magic, decodes through the matching pure codec, and windows at
+    5 ms — identical window hashes across containers under one md5-
+    arithmetic oracle prove the dispatch, and the ``container`` column
+    pins which codec ran. One Arrow pass, no shuffle."""
+    from wwwision_importservice_spark.operators.multimodal import (
+        _codec_importer,
+        audio_windows_any,
+    )
+
+    docs = load(spark, sf_dir, "documents", spread=True).select("doc_id")
+    import_wav = _codec_importer("audiocodec")
+    import_flac = _codec_importer("flaccodec")
+
+    def synth(it):
+        import hashlib as _hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        wavc = import_wav()
+        flacc = import_flac()
+        for pdf in it:
+            rows = []
+            for did in pdf["doc_id"]:
+                did = int(did)
+                mh = _hashlib.md5(str(did).encode()).hexdigest()
+                n = 40 + int(mh[:15], 16) % 100
+                samples = np.frombuffer(
+                    bytes.fromhex((mh * 18)[: 4 * n]), dtype="<i2"
+                )
+                if did % 2 == 0:
+                    blob = wavc.encode_wav(samples, 8000)
+                else:
+                    blob = flacc.encode_flac(
+                        samples.astype(np.int64), 8000, block_size=32
+                    )
+                rows.append((did, bytearray(blob)))
+            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
+
+    blobs = docs.mapInPandas(synth, schema="doc_id long, blob binary")
+    return audio_windows_any(blobs, "doc_id", window_s=0.005)
+
+
+@_register(
+    "x4_media_metadata",
+    # one mixed-modality corpus, FIFTEEN real container lanes, ONE
+    # oracle: doc_id % 15 picks PNG (md5-cycled 4x3 pixels), exact-gray
+    # q50 baseline JPEG, mono WAV, mono FLAC, the SAME gray grid as a
+    # PROGRESSIVE (SOF2) JPEG (r12), an ISO-BMFF MP4, a Matroska
+    # WebM (both r12 — container-walk metadata, no frame decode), a
+    # Xing/Info-tagged MPEG1-L3 MP3, an ADTS AAC-LC stream (both
+    # r13 — frame-HEADER walks, every byte of the frame region
+    # restated in SQL: header arithmetic from the bitrate/sample-rate
+    # tables + md5-hex bodies, so the sniff routing, the tag-frame
+    # exclusion, and the frame-region content address all sit under
+    # the hash), or an Ogg Opus/Vorbis stream (r13 — RFC 3533 page
+    # walk; the content address is the CONCATENATED media-packet
+    # payloads, so the fixture's b-varied pagination — continued
+    # packets included — provably cannot move the hash, and the Opus
+    # arm's granule is chosen as pre_skip + 48·ms so the 48 kHz
+    # granule arithmetic lands on an exact integer the SQL restates),
+    # an AVIF/HEIC image-item file (r13 — the meta-box walk: dims
+    # come from the PRIMARY item's ispe resolved through pitm/ipma,
+    # with b%4 half-size decoy thumbnail items ahead of it in ipco, so
+    # a first-ispe-wins parser fails the hash; content address = the
+    # coded mdat payload), or a WebP (r13 — VP8/VP8L header arithmetic:
+    # the lossy arm restates the 3-byte frame tag + 9d012a start code +
+    # u16le dims, the lossless arm the 0x2F signature + the LSB-packed
+    # 14+14+1-bit dims/alpha field; a b-varied VP8X extended wrap sits
+    # under the hash because the address is the coded bitstream), or a
+    # TIFF (r14 — the endian-aware IFD walk: dims/bit-depth/compression
+    # from the primary IFD, the IFD-chain page count in n_frames; the
+    # content address is the concatenated strip payloads, and the
+    # fixture b-varies endianness, IFD placement, and strip splits so
+    # every re-bake axis is provably outside the hash). The
+    # WAV and FLAC docs carry the SAME md5-derived sample series, so
+    # their payload_sha CASE arms are literally identical, pinning the
+    # cross-container content-address; the baseline and progressive
+    # JPEG arms share one pixel-sha expression, so the hash pins that
+    # the sniff-dispatch path decodes SOF2 to the identical pixels; the
+    # MP4 and WebM arms share the dims/duration formulas (restating the
+    # constructed box/EBML arithmetic) and differ only in codec family
+    # and payload address — mdat bytes for MP4, the Cluster body for
+    # WebM, whose constructed form is a CONSTANT element prefix
+    # (Timestamp 0 + track-1 SimpleBlock header, hex
+    # 'e78100a39c81000000') followed by the payload hex, so even the
+    # EBML framing sits under the hash. WebM duration is float-typed in
+    # the container but integer-valued at the default TimestampScale,
+    # where x*10^6/10^6 is IEEE-exact — both engines recover the exact
+    # integer. Every numeric field and all payload families derive from
+    # md5 string arithmetic.
+    f"""
+SELECT doc_id,
+       CASE WHEN m IN (2, 3, 7, 8, 9) THEN 'audio'
+            WHEN m IN (5, 6, 13, 14) THEN 'video'
+            ELSE 'image' END AS kind,
+       CASE m WHEN 0 THEN 'png' WHEN 2 THEN 'wav' WHEN 3 THEN 'flac'
+              WHEN 5 THEN 'mp4' WHEN 6 THEN 'webm' WHEN 7 THEN 'mp3'
+              WHEN 8 THEN 'aac' WHEN 9 THEN 'ogg'
+              WHEN 10 THEN (CASE WHEN b % 2 = 0 THEN 'avif'
+                                 ELSE 'heic' END)
+              WHEN 11 THEN 'webp'
+              WHEN 12 THEN 'tiff'
+              WHEN 13 THEN 'avi'
+              WHEN 14 THEN 'flv'
+              ELSE 'jpeg' END AS format,
+       CAST(CASE WHEN m = 0 THEN 4 WHEN m IN (1, 4) THEN 8 * bw
+                 WHEN m IN (5, 6) THEN 16 + b % 100
+                 WHEN m = 10 THEN 16 + b % 4000
+                 WHEN m = 11 THEN wp_w
+                 WHEN m = 12 THEN 16 + b % 30000
+                 WHEN m IN (13, 14) THEN 16 + b % 1920 END AS INT)
+         AS width,
+       CAST(CASE WHEN m = 0 THEN 3 WHEN m IN (1, 4) THEN 8 * bh
+                 WHEN m IN (5, 6) THEN 16 + (b // 7) % 100
+                 WHEN m = 10 THEN 16 + (b // 7) % 4000
+                 WHEN m = 11 THEN wp_h
+                 WHEN m = 12 THEN 16 + (b // 7) % 30000
+                 WHEN m IN (13, 14) THEN 16 + (b // 7) % 1080
+            END AS INT) AS height,
+       CAST(CASE WHEN m IN (2, 3) THEN n WHEN m = 5 THEN 1 + b % 30
+                 WHEN m = 6 THEN 1 + b % 9 WHEN m = 7 THEN mp3_n
+                 WHEN m = 8 THEN aac_n WHEN m = 9 THEN ogg_p
+                 WHEN m = 12 THEN tf_p WHEN m = 13 THEN av_f
+                 WHEN m = 14 THEN fl_f
+                 ELSE 1 END AS INT) AS n_frames,
+       CAST(CASE WHEN m IN (2, 3) THEN 8000 WHEN m = 7 THEN mp3_sr
+                 WHEN m = 8 THEN aac_sr
+                 WHEN m = 9 THEN ogg_sr
+                 -- AVI: first auds stream's WAVEFORMATEX; video-only
+                 -- files (b % 3 = 0) report NULL
+                 WHEN m = 13 AND b % 3 <> 0
+                   THEN list_extract([8000, 11025, 22050], 1 + b % 3)
+                 -- FLV: rate decoded from the audio tag header byte
+                 WHEN m = 14 AND b % 4 <> 0
+                   THEN list_extract([44100, 22050, 11025], 1 + b % 3)
+            END AS INT) AS sample_rate,
+       CAST(CASE WHEN m IN (2, 3) THEN 1
+                 WHEN m = 7 THEN 1 + (b // 9) % 2
+                 WHEN m = 8 THEN 1 + b % 6
+                 WHEN m = 9 THEN (CASE WHEN b % 2 = 0 THEN 1 + b % 2
+                                       ELSE 1 + b % 4 END)
+                 WHEN m = 13 AND b % 3 <> 0 THEN 1 + b % 2
+                 WHEN m = 14 AND b % 4 <> 0 THEN 1 + b % 2
+            END AS INT) AS channels,
+       CAST(CASE WHEN m IN (2, 3) THEN 16
+                 -- TIFF: bit depth is an IMAGE field here (tag 258),
+                 -- the one image lane that populates this column
+                 WHEN m = 12 THEN list_extract([1, 8, 16], 1 + b % 3)
+            END AS INT) AS bits_per_sample,
+       CAST(CASE WHEN m IN (5, 6) THEN 500 + b % 10000
+                 WHEN m = 7 THEN mp3_n * 1152 * 1000 // mp3_sr
+                 WHEN m = 8 THEN aac_n * 1024 * 1000 // aac_sr
+                 -- Opus: granule constructed as pre_skip + 48*ms so
+                 -- (granule - pre_skip)*1000 // 48000 == ms exactly;
+                 -- Vorbis: PCM granule over the stream rate
+                 WHEN m = 9 THEN (CASE WHEN b % 2 = 0 THEN 500 + b % 10000
+                                       ELSE (b % 100000) * 1000 // ogg_sr
+                                  END)
+                 -- AVI: frames * µs_per_frame // 1000, with the
+                 -- fixture's µs = 1000*(10 + b%90) so it is exact
+                 WHEN m = 13 THEN av_f * (10 + b % 90)
+                 -- FLV: onMetaData duration (seconds f64) -> ms via
+                 -- round; d/1000.0 round-trips exactly for d < 2^40
+                 WHEN m = 14 THEN 500 + b % 20000
+            END AS BIGINT) AS duration_ms,
+       CASE WHEN m = 5 THEN (CASE WHEN b % 2 = 0 THEN 'avc1'
+                                  ELSE 'hvc1' END)
+            WHEN m = 6 THEN (CASE WHEN b % 2 = 0 THEN 'V_VP9'
+                                  ELSE 'V_AV1' END)
+            WHEN m = 7 THEN 'mpeg1-l3'
+            WHEN m = 8 THEN 'aac-lc'
+            WHEN m = 9 THEN (CASE WHEN b % 2 = 0 THEN 'opus'
+                                  ELSE 'vorbis' END)
+            WHEN m = 10 THEN (CASE WHEN b % 2 = 0 THEN 'av01'
+                                   ELSE 'hvc1' END)
+            WHEN m = 11 THEN (CASE WHEN b % 2 = 0 THEN 'vp8'
+                                   ELSE 'vp8l' END)
+            WHEN m = 12 THEN list_extract(
+              ['raw', 'lzw', 'ccitt-g4', 'packbits', 'deflate'],
+              1 + b % 5)
+            WHEN m = 13 THEN list_extract(['mjpg', 'xvid', 'dib'],
+                                          1 + b % 3)
+            WHEN m = 14 THEN list_extract(['avc', 'vp6', 'h263'],
+                                          1 + b % 3) END AS codec,
+       CASE
+         WHEN m = 0 THEN sha256(substr(repeat(mh, 3), 1, 72))
+         WHEN m IN (1, 4) THEN sha256(array_to_string(
+           list_transform(range(0, (8*bw)*(8*bh)), i ->
+             repeat(printf('%02x',
+                    gs[((i // (8*bw)) // 8) * bw + ((i % (8*bw)) // 8) + 1]),
+                    3)), ''))
+         WHEN m = 5 THEN sha256(substr(repeat(mh, 2), 1, 48))
+         WHEN m = 6 THEN sha256('e78100a39c81000000' ||
+                                substr(repeat(mh, 2), 1, 48) ||
+                                repeat('a38481000000', b % 9))
+         -- MP3: the frame region is the Xing/Info tag frame (header +
+         -- side-info zeros + tag fourcc + flags=1 + frame count + zero
+         -- fill) followed by mp3_n identical media frames (header +
+         -- md5 body sliced to the table-derived length) — pure header
+         -- arithmetic, restated byte for byte
+         WHEN m = 7 THEN sha256(
+           mp3_hdr || repeat('00', mp3_side) ||
+           (CASE WHEN b % 2 = 0 THEN '58696e67' ELSE '496e666f' END) ||
+           '00000001' || printf('%08x', mp3_n) ||
+           repeat('00', mp3_fsize - 4 - mp3_side - 12) ||
+           repeat(mp3_hdr || substr(repeat(mh, 54), 1,
+                                    2 * (mp3_fsize - 4)), mp3_n))
+         -- ADTS: aac_n identical frames of 7-byte header (sync,
+         -- MPEG-4 id, AAC-LC profile, sampling index, channel config,
+         -- 13-bit frame_length, all-ones fullness) + md5 payload
+         WHEN m = 8 THEN sha256(repeat(
+           'fff1' ||
+           printf('%02x', 64 + (3 + b % 3) * 4 + (1 + b % 6) // 4) ||
+           printf('%02x', ((1 + b % 6) % 4) * 64) ||
+           printf('%02x', aac_fl // 8) ||
+           printf('%02x', (aac_fl % 8) * 32 + 31) || 'fc' ||
+           substr(repeat(mh, 4), 1, 2 * (aac_fl - 7)), aac_n))
+         -- Ogg: the content address is the CONCATENATED media-packet
+         -- payloads (ogg_p packets × ogg_l bytes of md5 hex) — page
+         -- framing, lacing, CRCs, and the b-varied pagination are all
+         -- provably outside the hash
+         WHEN m = 9 THEN sha256(substr(repeat(mh, 17), 1, 2 * ogg_p * ogg_l))
+         -- AVIF/HEIC: the coded item payload in mdat (md5 hex bytes);
+         -- the meta-box framing, decoy thumbnail properties, and iloc
+         -- offsets are all outside the hash
+         WHEN m = 10 THEN sha256(substr(repeat(mh, 4), 1, 2 * (20 + b % 40)))
+         -- WebP: the coded-bitstream region. Lossy = 3-byte LE frame
+         -- tag ((L<<5)|0x10) + 9d012a start code + u16le dims; lossless
+         -- = 0x2F + the LSB-packed (w-1)|(h-1)<<14|alpha<<28 u32le;
+         -- then the md5 payload. The b-varied VP8X extended wrap is
+         -- provably outside the hash.
+         WHEN m = 11 THEN sha256(
+           (CASE WHEN b % 2 = 0 THEN
+              printf('%02x%02x%02x', (wp_l * 32 + 16) % 256,
+                     (wp_l * 32 + 16) // 256 % 256,
+                     (wp_l * 32 + 16) // 65536 % 256)
+              || '9d012a'
+              || printf('%02x%02x', wp_w % 256, wp_w // 256)
+              || printf('%02x%02x', wp_h % 256, wp_h // 256)
+            ELSE
+              '2f' || printf('%02x%02x%02x%02x', wp_pk % 256,
+                             wp_pk // 256 % 256, wp_pk // 65536 % 256,
+                             wp_pk // 16777216 % 256)
+            END) || substr(repeat(mh, 4), 1, 2 * wp_l))
+         -- TIFF: the concatenated strip payload bytes (md5 hex); the
+         -- b-varied endianness, IFD placement, strip splits, and page
+         -- chaining are all provably outside the hash
+         WHEN m = 12 THEN sha256(substr(repeat(mh, 15), 1, 2 * tf_l * tf_p))
+         -- AVI: the demux-invariant per-stream concatenation (video
+         -- bytes then audio bytes, one contiguous md5 stream) — the
+         -- b-varied interleave ratio, audio chunking, JUNK pad, and
+         -- idx1 index are all provably outside the hash
+         WHEN m = 13 THEN sha256(substr(repeat(mh, 25), 1,
+           2 * (av_vl + (CASE WHEN b % 3 <> 0 THEN av_al ELSE 0 END))))
+         -- FLV: per-stream tag-body concatenation — every video tag
+         -- body is the 1-byte frame-type|codec-id header (keyframe
+         -- for tag 0) plus its md5 slice, every audio tag body the
+         -- 1-byte format|rate|size|channels header plus its slice;
+         -- interleave ratio and the rewritten onMetaData are outside
+         -- the hash
+         WHEN m = 14 THEN sha256(
+           array_to_string(list_transform(range(0, fl_f), i ->
+             (CASE WHEN i = 0 THEN fl_hk ELSE fl_hi END) ||
+             substr(repeat(mh, 42), 1 + 2 * fl_vl * i, 2 * fl_vl)), '')
+           || (CASE WHEN b % 4 <> 0 THEN
+                array_to_string(list_transform(range(0, fl_a), j ->
+                  fl_ha || substr(repeat(mh, 42),
+                                  1 + 2 * (fl_vl * fl_f + fl_al * j),
+                                  2 * fl_al)), '')
+               ELSE '' END))
+         ELSE sha256(substr(repeat(mh, 18), 1, 4 * n))
+       END AS payload_sha
+FROM (
+  SELECT *,
+         144 * mp3_kbps * 1000 // mp3_sr AS mp3_fsize,
+         'fffb' || printf('%02x', (9 + (b // 3) % 3) * 16 + (b % 3) * 4)
+          || (CASE WHEN (b // 9) % 2 = 0 THEN 'c0' ELSE '00' END)
+           AS mp3_hdr,
+         CASE WHEN (b // 9) % 2 = 0 THEN 17 ELSE 32 END AS mp3_side,
+         17 + b % 40 AS aac_fl,
+         (wp_w - 1) + (wp_h - 1) * 16384 +
+           (CASE WHEN (b // 5) % 2 = 1 THEN 268435456 ELSE 0 END) AS wp_pk
+  FROM (
+    SELECT doc_id, mh, b, doc_id % 15 AS m,
+           40 + b % 100 AS n, 2 + b % 3 AS bw, 2 + (b // 3) % 3 AS bh,
+           list_transform(range(0, (2 + b % 3) * (2 + (b // 3) % 3)), k ->
+             (CAST('0x' || substr(mh, 2*k+1, 2) AS INT) % 128) * 2) AS gs,
+           list_extract([44100, 48000, 32000], 1 + b % 3) AS mp3_sr,
+           list_extract([128, 160, 192], 1 + (b // 3) % 3) AS mp3_kbps,
+           1 + b % 12 AS mp3_n,
+           list_extract([48000, 44100, 32000], 1 + b % 3) AS aac_sr,
+           1 + (b // 5) % 9 AS aac_n,
+           CASE WHEN b % 2 = 0
+                THEN list_extract([48000, 24000, 16000], 1 + b % 3)
+                ELSE list_extract([44100, 32000, 22050], 1 + b % 3)
+           END AS ogg_sr,
+           1 + (b // 4) % 8 AS ogg_p, 10 + b % 25 AS ogg_l,
+           1 + b % 4096 AS wp_w, 1 + (b // 7) % 4096 AS wp_h,
+           20 + b % 40 AS wp_l,
+           1 + (b // 4) % 4 AS tf_p, 20 + b % 40 AS tf_l,
+           1 + b % 24 AS av_f, 30 + b % 200 AS av_vl,
+           20 + b % 100 AS av_al,
+           1 + b % 20 AS fl_f, 6 + b % 24 AS fl_vl,
+           1 + b % 3 AS fl_a, 8 + b % 20 AS fl_al,
+           -- FLV tag header bytes: keyframe/inter frame-type nibble |
+           -- codec id (avc=7, vp6=4, h263=2); audio = fmt<<4 |
+           -- rate_idx<<2 | 16-bit | stereo-bit (aac@44.1k else mp3)
+           list_extract(['17', '14', '12'], 1 + b % 3) AS fl_hk,
+           list_extract(['27', '24', '22'], 1 + b % 3) AS fl_hi,
+           printf('%02x', list_extract([174, 42, 38], 1 + b % 3)
+                  + b % 2) AS fl_ha
+    FROM (
+      SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS mh,
+             CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))
+                  AS BIGINT) AS b
+      FROM documents)
+  )
+)
+""",
+    # DRIVER row since r13 (VERDICT r12 ask #3; slot ceded by
+    # j3_updated): the fifteen-lane sniff-dispatch pass is the multimodal
+    # surface's composition proof — the per-modality driver rows pin
+    # each codec in isolation, this row pins the routing a mixed crawl
+    # actually runs. Deliberately NOT a bench headline: ~95% of its
+    # wall time is the fixture synthesizing fifteen container encodings
+    # per doc, cost the operator never pays on real data (bench.py
+    # documents the exclusion).
+)
+def x4_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X4 — unified mixed-modality metadata
+    (``operators/multimodal.py:media_metadata``): one corpus whose
+    blobs are real PNG, baseline-JPEG, WAV, FLAC, progressive-JPEG
+    (SOF2, r12), ISO-BMFF MP4, Matroska WebM (both r12), MPEG1-L3 MP3,
+    ADTS AAC-LC, Ogg Opus/Vorbis, AVIF/HEIC image items, WebP (all
+    r13), TIFF, legacy AVI, or Flash-era FLV (all r14) files by
+    ``doc_id % 15``; the kernel sniffs
+    each magic,
+    decodes through the matching pure codec (video:
+    ``operators/videocodec.py`` box/EBML walk; MP3/AAC:
+    ``operators/mp3codec.py`` frame-header walk; Ogg:
+    ``operators/oggcodec.py`` page walk; AVIF/HEIC: the meta-box item
+    walk with decoy thumbnails proving pitm/ipma resolution; WebP:
+    ``operators/webpcodec.py`` RIFF/VP8/VP8L headers with a b-varied
+    VP8X wrap under the hash — no frame/sample decode), and emits one
+    typed row — image dims, audio
+    frame/rate/channel/bit-depth counts, video dims/duration/codec, and
+    a decoded-payload content-address that is container-independent
+    (the WAV and FLAC docs share one sample series and must hash
+    identically; the baseline and progressive JPEG docs of one id-class
+    share one pixel formula, proving SOF2 through the SNIFF path, not
+    only the dedicated x4_jpeg_progressive row; the MP4 hash addresses
+    the mdat payload and the WebM hash the Cluster body, whose
+    constructed form is a constant EBML prefix + the payload hex — so
+    the EBML framing itself sits under the hash). The n_bytes column is
+    excluded from the oracle (compressed container sizes aren't
+    SQL-derivable); everything else is md5 arithmetic. One Arrow pass,
+    no shuffle."""
+    from wwwision_importservice_spark.operators.multimodal import (
+        _codec_importer,
+        media_metadata,
+    )
+
+    docs = load(spark, sf_dir, "documents", spread=True).select("doc_id")
+    import_img = _codec_importer()
+    import_jpeg = _codec_importer("jpegcodec")
+    import_wav = _codec_importer("audiocodec")
+    import_flac = _codec_importer("flaccodec")
+    import_vid = _codec_importer("videocodec")
+    import_mp3 = _codec_importer("mp3codec")
+    import_ogg = _codec_importer("oggcodec")
+    import_webp = _codec_importer("webpcodec")
+    import_tiff = _codec_importer("tiffcodec")
+    import_avi = _codec_importer("avicodec")
+    import_flv = _codec_importer("flvcodec")
+
+    def synth(it):
+        import hashlib as _hashlib
+
+        import numpy as np
+        import pandas as pd
+
+        img = import_img()
+        jp = import_jpeg()
+        wavc = import_wav()
+        flacc = import_flac()
+        vidc = import_vid()
+        mp3c = import_mp3()
+        oggc = import_ogg()
+        webpc = import_webp()
+        tiffc = import_tiff()
+        avic = import_avi()
+        flvc = import_flv()
+        for pdf in it:
+            rows = []
+            for did in pdf["doc_id"]:
+                did = int(did)
+                mh = _hashlib.md5(str(did).encode()).hexdigest()
+                b = int(mh[:15], 16)
+                m = did % 15
+                if m == 14:
+                    # FLV (r14): dims/duration land in onMetaData (the
+                    # AMF0 doubles the oracle restates as integers),
+                    # frames/codec/rate/channels in the tag headers;
+                    # the content address is the per-stream tag-body
+                    # concatenation over ONE contiguous md5 stream
+                    # (video slices then audio slices), with the
+                    # b-varied interleave and a padded metadata tag
+                    # provably outside the hash; b%4==0 files are
+                    # video-only
+                    fl_f, fl_vl = 1 + b % 20, 6 + b % 24
+                    fl_a, fl_al = 1 + b % 3, 8 + b % 20
+                    has_audio = b % 4 != 0
+                    total = fl_vl * fl_f + (fl_al * fl_a if has_audio
+                                            else 0)
+                    full = bytes.fromhex((mh * 42)[: 2 * total])
+                    frames = [full[fl_vl * i : fl_vl * (i + 1)]
+                              for i in range(fl_f)]
+                    base = fl_vl * fl_f
+                    chunks = ([full[base + fl_al * j : base + fl_al * (j + 1)]
+                               for j in range(fl_a)] if has_audio else None)
+                    blob = flvc.encode_flv(
+                        16 + b % 1920, 16 + (b // 7) % 1080,
+                        500 + b % 20000, frames,
+                        codec=("avc", "vp6", "h263")[b % 3],
+                        audio_chunks=chunks,
+                        sample_rate=(44100, 22050, 11025)[b % 3],
+                        channels=1 + b % 2,
+                        interleave=b % 3,
+                        extra_meta=(b // 3) % 2 == 1,
+                    )
+                elif m == 13:
+                    # AVI (r14): header fields restated in the oracle
+                    # from avih/strh/strf; the content address is the
+                    # demux-invariant per-stream concatenation (one
+                    # contiguous md5 stream: video slice then audio
+                    # slice), and b varies the interleave ratio, audio
+                    # chunking, JUNK pad, and idx1 presence so every
+                    # re-mux axis sits under the hash; b%3==0 files are
+                    # video-only (NULL rate/channels)
+                    av_f, av_vl, av_al = (1 + b % 24, 30 + b % 200,
+                                          20 + b % 100)
+                    has_audio = b % 3 != 0
+                    total = av_vl + (av_al if has_audio else 0)
+                    full = bytes.fromhex((mh * 25)[: 2 * total])
+                    blob = avic.encode_avi(
+                        16 + b % 1920, 16 + (b // 7) % 1080,
+                        av_f, 1000 * (10 + b % 90),
+                        video_payload=full[:av_vl],
+                        codec=("MJPG", "XVID", "DIB ")[b % 3],
+                        audio_payload=(full[av_vl:] if has_audio
+                                       else None),
+                        sample_rate=(8000, 11025, 22050)[b % 3],
+                        channels=1 + b % 2,
+                        interleave=b % 4,
+                        audio_chunks=1 + b % 3,
+                        junk=(b // 3) % 2 == 1,
+                        with_idx1=(b // 5) % 2 == 1,
+                    )
+                elif m == 12:
+                    # TIFF (r14): dims/bits/compression restated in the
+                    # oracle from the primary IFD; the content address
+                    # is the concatenated strip payloads, and b varies
+                    # endianness, IFD placement, strip splits, and the
+                    # page count so every re-bake axis sits under the
+                    # hash (pages multiply the payload, so tf_p is BOTH
+                    # n_frames and a hash input)
+                    tf_p, tf_l = 1 + (b // 4) % 4, 20 + b % 40
+                    blob = tiffc.encode_tiff(
+                        16 + b % 30000, 16 + (b // 7) % 30000,
+                        payload=bytes.fromhex((mh * 15)[: 2 * tf_l * tf_p]),
+                        compression=("raw", "lzw", "ccitt-g4", "packbits",
+                                     "deflate")[b % 5],
+                        bits=(1, 8, 16)[b % 3],
+                        pages=tf_p,
+                        strips=1 + b % 3,
+                        endian="<" if b % 2 == 0 else ">",
+                        ifd_first=(b // 3) % 2 == 1,
+                    )
+                elif m == 11:
+                    # WebP: lossy (even b) restates the frame tag +
+                    # start code + u16le dims; lossless (odd b) the
+                    # 0x2F + LSB-packed dims/alpha field; a b-varied
+                    # VP8X extended wrap proves the coded-bitstream
+                    # address ignores re-containerization
+                    blob = webpc.encode_webp(
+                        1 + b % 4096, 1 + (b // 7) % 4096,
+                        codec="vp8" if b % 2 == 0 else "vp8l",
+                        payload=bytes.fromhex((mh * 4)[: 2 * (20 + b % 40)]),
+                        alpha=(b % 2 == 1) and ((b // 5) % 2 == 1),
+                        extended=((b // 3) % 2 == 1),
+                    )
+                elif m == 10:
+                    # AVIF/HEIC image item: dims via the primary item's
+                    # ispe with b%4 half-size DECOY thumbnail items
+                    # ahead of it in ipco — pitm/ipma resolution sits
+                    # under the driver hash; payload = coded md5 bytes
+                    blob = vidc.encode_heif(
+                        16 + b % 4000, 16 + (b // 7) % 4000,
+                        codec="av01" if b % 2 == 0 else "hvc1",
+                        payload=bytes.fromhex((mh * 4)[: 2 * (20 + b % 40)]),
+                        extra_items=b % 4,
+                    )
+                elif m == 9:
+                    # Ogg: p equal-length md5-hex packets (the oracle
+                    # restates the CONCATENATION — packet boundaries
+                    # and the b-varied pagination are outside the
+                    # hash); Opus granule = pre_skip + 48*ms so the
+                    # 48 kHz arithmetic is exact, Vorbis granule is a
+                    # PCM position over the stream rate
+                    p, length = 1 + (b // 4) % 8, 10 + b % 25
+                    hx = (mh * 17)[: 2 * p * length]
+                    pkts = [
+                        bytes.fromhex(hx[2 * length * i : 2 * length * (i + 1)])
+                        for i in range(p)
+                    ]
+                    if b % 2 == 0:
+                        ms, ps = 500 + b % 10000, b % 1000
+                        blob = oggc.encode_ogg(
+                            "opus", (48000, 24000, 16000)[b % 3],
+                            1 + b % 2, pkts,
+                            granule_end=ps + 48 * ms, pre_skip=ps,
+                            max_page_segments=1 + b % 5,
+                        )
+                    else:
+                        blob = oggc.encode_ogg(
+                            "vorbis", (44100, 32000, 22050)[b % 3],
+                            1 + b % 4, pkts,
+                            granule_end=b % 100000,
+                            max_page_segments=1 + b % 5,
+                        )
+                elif m == 7:
+                    # MPEG1 Layer III: rate/bitrate from the header
+                    # tables, a Xing (even b) or Info (odd) tag frame,
+                    # per-frame body = md5 hex sliced to the EXACT
+                    # table-derived frame length (no encoder padding,
+                    # so the oracle restates every byte)
+                    sr = (44100, 48000, 32000)[b % 3]
+                    kbps = (128, 160, 192)[(b // 3) % 3]
+                    size = 144 * kbps * 1000 // sr
+                    blob = mp3c.encode_mp3(
+                        sr, kbps, n_frames=1 + b % 12,
+                        channels=1 + (b // 9) % 2,
+                        payload=bytes.fromhex((mh * 54)[: 2 * (size - 4)]),
+                        xing="Xing" if b % 2 == 0 else "Info",
+                    )
+                elif m == 8:
+                    # ADTS AAC-LC: sampling index 3..5, channel config
+                    # 1..6, md5-hex frame payloads
+                    blob = mp3c.encode_adts(
+                        (48000, 44100, 32000)[b % 3],
+                        n_frames=1 + (b // 5) % 9,
+                        channels=1 + b % 6,
+                        payload=bytes.fromhex((mh * 4)[: 2 * (10 + b % 40)]),
+                    )
+                elif m == 5:
+                    blob = vidc.encode_mp4(
+                        16 + b % 100, 16 + (b // 7) % 100,
+                        500 + b % 10000,
+                        payload=bytes.fromhex((mh * 2)[:48]),
+                        codec="avc1" if b % 2 == 0 else "hvc1",
+                        n_frames=1 + b % 30,  # stts under the hash (r12)
+                    )
+                elif m == 6:
+                    blob = vidc.encode_webm(
+                        16 + b % 100, 16 + (b // 7) % 100,
+                        500 + b % 10000,
+                        payload=bytes.fromhex((mh * 2)[:48]),
+                        codec="V_VP9" if b % 2 == 0 else "V_AV1",
+                        n_frames=1 + b % 9,  # block counting under the
+                        # hash: extra frames are constant-framing empty
+                        # SimpleBlocks the oracle restates as hex
+                    )
+                elif m == 0:
+                    px = np.frombuffer(
+                        bytes.fromhex((mh * 3)[:72]), dtype=np.uint8
+                    ).reshape(3, 4, 3)
+                    blob = img.encode_png(px)
+                elif m in (1, 4):
+                    bw, bh = 2 + b % 3, 2 + (b // 3) % 3
+                    gs = [
+                        (int(mh[2 * k : 2 * k + 2], 16) % 128) * 2
+                        for k in range(bw * bh)
+                    ]
+                    grid = np.array(gs, np.uint8).reshape(bh, bw)
+                    arr = np.repeat(
+                        np.repeat(grid, 8, 0), 8, 1
+                    )[:, :, None].repeat(3, 2)
+                    blob = jp.encode_jpeg(
+                        arr, quality=50, subsampling="444",
+                        progressive=(m == 4),
+                    )
+                else:
+                    n = 40 + b % 100
+                    samples = np.frombuffer(
+                        bytes.fromhex((mh * 18)[: 4 * n]), dtype="<i2"
+                    )
+                    if m == 2:
+                        blob = wavc.encode_wav(samples, 8000)
+                    else:
+                        blob = flacc.encode_flac(
+                            samples.astype(np.int64), 8000, block_size=32
+                        )
+                rows.append((did, bytearray(blob)))
+            yield pd.DataFrame(rows, columns=["doc_id", "blob"])
+
+    blobs = docs.mapInPandas(synth, schema="doc_id long, blob binary")
+    return media_metadata(blobs, "doc_id").drop("n_bytes")
 
 
 # --------------------------------------------------------------------------- #

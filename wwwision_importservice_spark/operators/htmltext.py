@@ -30,7 +30,7 @@ tokenizer and crawl curation must not die on tag soup; the worst
 input degrades to its visible text. Cost is linear in the input.
 
 Scale shape: :func:`html_extract` is one ``mapInPandas`` pass (the
-``warc_records`` posture) — per-document CPU, no shuffle.
+``media_metadata`` posture) — per-document CPU, no shuffle.
 
 Reference parallel: none (records-in/records-out); training-data
 extension surface (SURVEY §2 X11 family, with `operators/warc.py`).

@@ -7,9 +7,8 @@ fragments, tracking parameters, default ports, shuffled query order,
 trailing slashes); URL-level dedup — the cheapest dedup an LLM
 pipeline runs, before any content hash — needs ONE canonical spelling
 per page. :func:`canonical_url` applies the standard normalization
-rules entirely with built-in functions (the contrast to byte parsers
-such as :mod:`~wwwision_importservice_spark.operators.warc`, which need
-per-byte Python in an Arrow batch):
+rules entirely with built-in functions (the contrast to the Arrow
+codec lanes, which need per-byte Python):
 
 1. trim; strip the ``#fragment``.
 2. lowercase the scheme and the authority (never the path/query).

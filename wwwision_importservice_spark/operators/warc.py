@@ -5,7 +5,7 @@ Common-Crawl-style WARC is the canonical raw input of an LLM data
 pipeline — petabytes of crawl data arrive as concatenated WARC
 records (usually one gzip member per record), and the FIRST operator
 any curation chain runs is "split the container into typed records".
-This module is that operator, as a pure-stdlib byte parser:
+This module is that operator, in the repo's pure-codec style:
 
 - A WARC file is a sequence of records: a ``WARC/1.0`` (or 1.1)
   version line, CRLF-terminated named headers, CRLF CRLF, then
@@ -26,10 +26,10 @@ This module is that operator, as a pure-stdlib byte parser:
   identically.
 
 Scale shape: ``warc_records`` is ONE ``mapInPandas`` pass over
-``(id, blob)`` — per-file CPU, no shuffle. At 100 TB the unit of
-parallelism is the WARC file (Common Crawl ships ~1 GB files); per-file
-records explode to rows inside the Arrow batch with no driver
-involvement.
+``(id, blob)`` — per-file CPU, no shuffle, the ``media_metadata``
+posture. At 100 TB the unit of parallelism is the WARC file (Common
+Crawl ships ~1 GB files); per-file records explode to rows inside the
+Arrow batch with no driver involvement.
 
 Threat model: crawl bytes are UNTRUSTED — malformed framing raises
 :class:`WarcDecodeError`; record count and decompressed size are
