@@ -484,3 +484,27 @@ def test_eel_plus_chain_literal_fold(spark):
     assert spark.sql(f"SELECT {sql} AS v").first()["v"] == "3x"
     sql = translate_eel('${"x" + 1 + 2}')  # string first: all concat
     assert spark.sql(f"SELECT {sql} AS v").first()["v"] == "x12"
+
+
+def test_case_mappings_match_icu_without_it(spark):
+    """get_spark turns Spark's ICU case mappings off (their one-time
+    table costs seconds on a cold JVM); upper/lower give the results
+    they gave with ICU on for ASCII, German sharp s and Greek final
+    sigma."""
+    from wwwision_importservice_spark.session import local_frame
+
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
+    df = local_frame(
+        spark, "x string", [("Hello World 123",), ("straße",), ("ΣΑΣ ΑΣ",)]
+    )
+    mapper = Mapper({
+        "x": "${record.x}",
+        "u": "${String.toUpperCase(record.x)}",
+        "l": "${String.toLowerCase(record.x)}",
+    })
+    got = sorted(tuple(r) for r in mapper.apply(df).collect())
+    assert got == sorted([
+        ("Hello World 123", "HELLO WORLD 123", "hello world 123"),
+        ("straße", "STRASSE", "straße"),
+        ("ΣΑΣ ΑΣ", "ΣΑΣ ΑΣ", "σας ας"),
+    ])

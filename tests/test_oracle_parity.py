@@ -91,11 +91,15 @@ def test_driver_registry_within_check_budget():
 
 
 def test_entry_smoke(spark):
-    import importlib
-    import sys
+    # load the entry point of the tree under test, whatever sys.path
+    # or an earlier import holds
+    import importlib.util
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
-    entry_mod = importlib.import_module("__spark_entry__")
+    path = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
+    spec = importlib.util.spec_from_file_location("__spark_entry__", path)
+    entry_mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry_mod)
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert "change_type" in df.columns

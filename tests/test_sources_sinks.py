@@ -1169,26 +1169,6 @@ def test_dbapi_paramstyle_whitelist():
         assert t.placeholder == ph
 
 
-def test_dbapi_replay_probe_content_compare(tmp_path):
-    """The at-least-once INSERT replay predicate: identical stored row
-    -> True (our prior attempt's commit); same id with different
-    content -> False (genuine conflict, stays quarantined); absent ->
-    False."""
-    from wwwision_importservice_spark.sinks.dbapi import _make_replay_probe
-
-    db = str(tmp_path / "probe.db")
-    conn = sqlite3.connect(db)
-    conn.execute("CREATE TABLE r (id TEXT PRIMARY KEY, title TEXT, v INTEGER)")
-    conn.execute("INSERT INTO r VALUES ('a', 't', 1)")
-    conn.commit()
-    probe = _make_replay_probe("r", "id", "?", ["id", "title", "v"])
-    cur = conn.cursor()
-    assert probe(conn, cur, ("a", "t", 1)) is True
-    assert probe(conn, cur, ("a", "DIFFERENT", 1)) is False
-    assert probe(conn, cur, ("missing", "t", 1)) is False
-    conn.close()
-
-
 def test_dbapi_error_samples_and_unmatched(spark, tmp_path):
     """New ApplyStats surfaces (r11 review catches): quarantined rows
     carry up to 5 (statement, params, error) samples, and UPDATEs that
@@ -1221,6 +1201,207 @@ def test_dbapi_error_samples_and_unmatched(spark, tmp_path):
         spark, make_cdc(spark, [("ghost", 2, "u", "update")])
     )
     assert stats2.unmatched == 1
+
+
+def test_dbapi_write_partitions_is_ignored_with_a_warning(tmp_path):
+    """``write_partitions`` still loads from old configurations; apply
+    writes over one driver connection whatever it says."""
+    with pytest.warns(UserWarning, match="write_partitions is ignored"):
+        DbapiTarget(connection_factory=lambda: None, table="t",
+                    write_partitions=8)
+
+
+def _no_python_worker(monkeypatch):
+    """Make ``foreachPartition``, the way a sink would run its writer in
+    Python workers, fail loudly."""
+    from pyspark.rdd import RDD
+    from pyspark.sql import DataFrame
+
+    def refuse(self, *args, **kwargs):
+        raise AssertionError("foreachPartition starts a Python worker")
+
+    monkeypatch.setattr(DataFrame, "foreachPartition", refuse)
+    monkeypatch.setattr(RDD, "foreachPartition", refuse)
+
+
+def test_dbapi_apply_starts_no_python_worker(spark, sqlite_target, monkeypatch):
+    from wwwision_importservice_spark.session import local_frame
+
+    target, db = sqlite_target
+    target.batch_size = 2
+    _no_python_worker(monkeypatch)
+    cdc = local_frame(
+        spark,
+        "_id string, _version long, title string, change_type string",
+        [("a", 1, "t1", "add"), ("b", 1, "t2", "add"), ("c", 1, "t3", "add")],
+    ).repartition(3)
+    stats = target.apply(spark, cdc)
+    assert (stats.added, stats.errors) == (3, 0)
+    assert q(db, "SELECT id, title FROM records ORDER BY id") == [
+        ("a", "t1"), ("b", "t2"), ("c", "t3"),
+    ]
+
+
+def test_dbapi_pipeline_run_starts_no_python_worker(spark, tmp_path, monkeypatch):
+    """A whole sync into a DbapiTarget — parquet source, keying, state
+    read, diff, Eel mapping, apply — runs on the JVM and the driver."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wwwision_importservice_spark.mapping import Mapper
+    from wwwision_importservice_spark.plans.pipeline import ImportPipeline
+    from wwwision_importservice_spark.plans.preset import Preset
+
+    src = tmp_path / "src.parquet"
+    pq.write_table(pa.table({
+        "id": ["a", "b", "c"], "v": [1, 2, 3], "title": ["x", "y", "straße"],
+    }), src)
+    db = str(tmp_path / "t.db")
+    conn = sqlite3.connect(db)
+    conn.execute(
+        "CREATE TABLE records (id TEXT PRIMARY KEY, title TEXT, version INTEGER)"
+    )
+    conn.execute("INSERT INTO records VALUES ('a', 'X', 1), ('z', 'Z', 1)")
+    conn.commit()
+    conn.close()
+    preset = Preset(
+        name="no-worker",
+        source=FileSource(path=str(src), format="parquet"),
+        target=DbapiTarget(
+            connection_factory=functools.partial(sqlite3.connect, db),
+            table="records", version_column="version",
+        ),
+        id_attribute="id",
+        version_attribute="v",
+        mapper=Mapper({"title": "${String.toUpperCase(record.title)}"}),
+    )
+    _no_python_worker(monkeypatch)
+    stats = ImportPipeline(preset, spark).run()
+    assert stats == {"added": 2, "updated": 0, "removed": 1, "errors": 0}
+    assert q(db, "SELECT id, title, version FROM records ORDER BY id") == [
+        ("a", "X", 1), ("b", "Y", 2), ("c", "STRASSE", 3),
+    ]
+
+
+def test_dbapi_failed_sync_leaves_target_and_replica_consistent(spark, tmp_path):
+    """One transaction per apply: a sync (batch 3, 10 adds) that loses
+    its connection after the first chunk raises and leaves the table as
+    it was; the next run records all 10 adds, and replaying the
+    changelog builds a replica equal to the primary."""
+    from wwwision_importservice_spark.mapping import Mapper
+    from wwwision_importservice_spark.plans.pipeline import (
+        ImportPipeline,
+        replay_changelog,
+    )
+    from wwwision_importservice_spark.plans.preset import Preset
+
+    class LosesConnectionAfterFirstChunk:
+        """A sqlite3 connection (and its own cursor) that is lost when the
+        second ``executemany`` chunk starts: the real connection closes,
+        dropping whatever it has not committed, and that call and every
+        later one raise, as a dropped server connection would."""
+
+        def __init__(self, db: str) -> None:
+            self._conn = sqlite3.connect(db)
+            self._cur = self._conn.cursor()
+            self._chunks = 0
+            self._lost = False
+
+        def _alive(self) -> None:
+            if self._lost:
+                raise sqlite3.OperationalError("connection lost")
+
+        def cursor(self):
+            return self
+
+        @property
+        def rowcount(self) -> int:
+            return self._cur.rowcount
+
+        def execute(self, sql, params=()):
+            self._alive()
+            self._cur.execute(sql, params)
+
+        def executemany(self, sql, rows):
+            if self._chunks:
+                self._conn.close()
+                self._lost = True
+            self._alive()
+            self._cur.executemany(sql, rows)
+            self._chunks += 1
+
+        def fetchone(self):
+            self._alive()
+            return self._cur.fetchone()
+
+        def fetchmany(self, size):
+            self._alive()
+            return self._cur.fetchmany(size)
+
+        def commit(self):
+            self._alive()
+            self._conn.commit()
+
+        def rollback(self):
+            self._alive()
+            self._conn.rollback()
+
+        def close(self):
+            self._conn.close()
+
+    def make_db(name):
+        db = str(tmp_path / name)
+        conn = sqlite3.connect(db)
+        conn.execute(
+            "CREATE TABLE records (id TEXT PRIMARY KEY, title TEXT, version INTEGER)"
+        )
+        conn.commit()
+        conn.close()
+        return db
+
+    primary, replica = make_db("primary.db"), make_db("replica.db")
+    lose = {"on": True}
+
+    def factory():
+        if lose["on"]:
+            return LosesConnectionAfterFirstChunk(primary)
+        return sqlite3.connect(primary)
+
+    preset = Preset(
+        name="atomic",
+        source=CallableSource(
+            rows=[(f"id{i}", 1, f"t{i}") for i in range(10)],
+            schema="id string, v long, title string",
+        ),
+        target=DbapiTarget(
+            connection_factory=factory, table="records",
+            version_column="version", batch_size=3,
+        ),
+        id_attribute="id",
+        version_attribute="v",
+        mapper=Mapper({"title": "${record.title}"}),
+    )
+    clog = str(tmp_path / "clog")
+    pipeline = ImportPipeline(preset, spark)
+    with pytest.raises(Exception, match="connection lost"):
+        pipeline.run(changelog_dir=clog, run_id="r1")
+    assert q(primary, "SELECT count(*) FROM records") == [(0,)]
+    assert not (tmp_path / "clog" / "run_id=r1").exists()
+
+    lose["on"] = False
+    stats = pipeline.run(changelog_dir=clog, run_id="r2")
+    assert stats == {"added": 10, "updated": 0, "removed": 0, "errors": 0}
+    assert spark.read.parquet(f"{clog}/run_id=r2").count() == 10
+
+    replay_changelog(
+        spark,
+        DbapiTarget(functools.partial(sqlite3.connect, replica), "records",
+                    version_column="version"),
+        clog,
+    )
+    everything = "SELECT id, title, version FROM records ORDER BY id"
+    assert q(replica, everything) == q(primary, everything)
+    assert len(q(primary, everything)) == 10
 
 
 def test_dbapi_apply_needs_no_package_on_worker_path(tmp_path):

@@ -533,7 +533,6 @@ def o3_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         table="records",
         id_column="id",
         version_column="version",
-        write_partitions=1,  # sqlite: single writer
         batch_size=100,
     )
     stats = target.apply(spark, src.drop("__key"))

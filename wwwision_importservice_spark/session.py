@@ -78,6 +78,16 @@ def get_spark(
         # The driver testdata's events table stores TIMESTAMP(NANOS) which
         # Spark rejects by default; read as raw nanos (LongType) instead.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # upper/lower (Eel's String.toUpperCase, toLowerCase, ucfirst and
+        # lcfirst) use the JVM's case mappings instead of ICU's. ICU's
+        # first use builds a case table over every code point, which cost
+        # each task of the first mapping stage 1.7 s; in a fresh JVM the
+        # first upper() takes 2.2 s with ICU and 0.25 s without. Over all
+        # 1,112,064 code points (Java 17, ICU 77) the two disagree on 67
+        # for upper and 67 for lower, all letters added in Unicode 14-16
+        # (for upper: Vithkuqi 35, Latin 6, Glagolitic 1, 25 others), and
+        # agree everywhere else, final-sigma context included.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

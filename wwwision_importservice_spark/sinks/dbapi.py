@@ -8,17 +8,17 @@ The Python analogue of the reference's Doctrine-DBAL target
   when a hidden column is configured, W6),
 - W3 removeRecord → batched ``DELETE … WHERE id = ?``; soft-delete mode
   issues ``UPDATE … SET hidden = 1`` instead (W7),
-- W8 batching     → ``batch_size`` rows per executemany flush (the
+- W8 batching     → ``batch_size`` rows per executemany chunk (the
   reference's ``MAXIMUM_BATCH_SIZE = 1000``),
-- O3 isolation    → a failed batch retries row-by-row; bad rows are
-  counted + sampled (``ApplyStats.error_samples`` carries up to
-  ``_MAX_ERROR_SAMPLES`` ``(statement, params, error)`` examples), good
-  rows still land. Connection-level failures ABORT rather than
-  quarantine: when every row of a chunk fails AND the connection no
-  longer answers a ``SELECT 1`` probe, the partition raises so the
-  sync fails loudly instead of mislabeling its contents as quarantined
-  rows (r11 review catch; the reference continues on per-record
-  \\Error and aborts on \\Exception),
+- O3 isolation    → a failed chunk is rolled back to its savepoint and
+  retried row-by-row; bad rows are counted + sampled
+  (``ApplyStats.error_samples`` carries up to ``_MAX_ERROR_SAMPLES``
+  ``(statement, params, error)`` examples), good rows still land.
+  Connection-level failures ABORT rather than quarantine: when every row
+  of a chunk fails AND the connection no longer answers a ``SELECT 1``
+  probe, the apply raises so the sync fails loudly instead of
+  mislabeling its contents as quarantined rows (the reference continues
+  on per-record \\Error and aborts on \\Exception),
 - W4 removeAll    → single ``DELETE FROM`` returning the count.
 
 State read (``current_state``, ``DbalTarget.php:118-128``): the narrow
@@ -30,36 +30,38 @@ not the whole keyset (the reference holds it all in a PHP array), and
 the frame is an eager snapshot: the connection is closed before it is
 returned and it never reads the table again.
 
-Delivery semantics are AT-LEAST-ONCE per Spark task: a task retry
-(executor loss, speculation) re-runs a partition whose chunks may have
-already committed. Re-applied UPDATE/DELETEs are naturally idempotent;
-re-applied INSERTs are detected ON RETRY ATTEMPTS ONLY
-(``TaskContext.attemptNumber() > 0``) by comparing the stored row's
-CONTENT to what was being written — an identical row counts toward
-``added`` (the failed attempt's accumulator adds were discarded, its
-commits were not), a same-id row with different values stays a
-quarantined conflict, and first attempts keep the reference's
-duplicate-add-is-an-error semantics untouched. UPDATE/DELETE chunks whose driver reports a
-reliable rowcount shortfall count the difference in
+Distribution model: one driver connection, like the reference's single
+DBAL connection. ``apply`` streams the projected change set into the
+driver with ``toLocalIterator(prefetchPartitions=True)`` (at most two
+partitions held at a time) and writes it over one connection from
+``connection_factory``, which ``current_state``, ``setup`` and
+``remove_all`` also call on the driver. No Python worker runs, so the
+factory need not pickle. ``write_partitions`` is accepted for old
+configurations and ignored, with a warning.
+
+Delivery semantics: ONE TRANSACTION per ``apply``. The run opens an
+outer savepoint that is never released, each chunk runs under its own
+savepoint and each row of a retried chunk under one more, and the
+connection commits once, after the last chunk. Nesting the chunk
+savepoints under the outer one matters for drivers that begin a
+transaction only before DML (Python's ``sqlite3``): there a ``SAVEPOINT``
+issued outside a transaction opens one, and releasing that outermost
+savepoint would commit. A failure that aborts the apply rolls the whole
+change set back, so a failed sync leaves the target as it was and the
+next run re-diffs every change. UPDATE/DELETE chunks whose driver reports
+a reliable rowcount shortfall count the difference in
 ``ApplyStats.unmatched`` (the target row drifted out-of-band; the next
 run's diff re-converges it).
-
-Distribution model: writes run **executor-side** via
-``DataFrame.foreachPartition`` — each partition opens its own connection
-from the picklable ``connection_factory`` and writes its slice, giving
-partition-parallel batched writes instead of the reference's single
-connection. ``write_partitions`` caps the fan-in for stores that dislike
-concurrent writers (sqlite: 1). Error counts travel through a Spark
-accumulator, not driver-side state.
 """
 
 from __future__ import annotations
 
+import contextlib
+import warnings
 from collections.abc import Callable
 from typing import Any
 
 import pyarrow as pa
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -96,49 +98,76 @@ def _hidden_column(values: tuple) -> list:
     return [bool(v) if v is not None else False for v in values]
 
 
-def _make_replay_probe(table: str, id_col: str, ph: str, insert_cols: list[str]):
-    """Factory for the at-least-once INSERT replay predicate: True iff
-    the target already holds EXACTLY the row an INSERT was about to
-    write. Content, not just id, is compared: a same-id row with
-    different values is a genuine conflict (out-of-band drift,
-    duplicate feed) and must stay quarantined — the o3 chaos test
-    pre-seeds exactly that shape. Returns a NESTED function so
-    cloudpickle ships it by value into the self-contained
-    foreachPartition closure (the _make_image_decoder convention), and
-    the factory itself is unit-testable against a plain connection."""
-    sql = (
-        f"SELECT {', '.join(insert_cols)} FROM {table} WHERE {id_col} = {ph}"
-    )
+class _ChunkWriter:
+    """Writes chunks of one ``apply`` inside its open transaction and
+    counts quarantined rows, samples and rowcount shortfalls into
+    ``stats``."""
 
-    def probe(conn, cur, row: tuple) -> bool:
+    def __init__(self, cur, stats: ApplyStats) -> None:
+        self.cur = cur
+        self.stats = stats
+
+    def _track_shortfall(self, n_rows: int) -> None:
+        # UPDATE/DELETE matching zero rows: the driver's rowcount (when
+        # reliable, i.e. >= 0) reveals how many statements wrote
+        # nothing — out-of-band drift the next diff re-converges
+        rc = self.cur.rowcount
+        if rc is not None and 0 <= rc < n_rows:
+            self.stats.unmatched += n_rows - rc
+
+    def write(self, sql: str, chunk: list[tuple], counts_matter: bool = False) -> int:
+        """Write one chunk under a savepoint; returns the rows written."""
+        if not chunk:
+            return 0
+        cur = self.cur
+        cur.execute("SAVEPOINT apply_chunk")
         try:
-            cur.execute(sql, (row[0],))
-            got = cur.fetchone()
+            cur.executemany(sql, chunk)
+            if counts_matter:
+                self._track_shortfall(len(chunk))
+            written = len(chunk)
         except Exception:
-            conn.rollback()
-            return False
-        return got is not None and tuple(got) == tuple(row)
+            # O3: undo the partial chunk, retry row-by-row, quarantine
+            # bad rows
+            cur.execute("ROLLBACK TO SAVEPOINT apply_chunk")
+            written = self._write_rows(sql, chunk, counts_matter)
+        cur.execute("RELEASE SAVEPOINT apply_chunk")
+        return written
 
-    return probe
-
-
-def _make_error_samples_param(limit: int) -> AccumulatorParam:
-    """AccumulatorParam collecting at most ``limit`` quarantine examples
-    executor-side. The class is defined inside the factory so cloudpickle
-    ships it by value with the ``foreachPartition`` closure; a
-    module-level class pickles by reference, and every Python worker
-    would then have to import this package."""
-
-    class ErrorSamples(AccumulatorParam):
-        def zero(self, value):
-            return []
-
-        def addInPlace(self, a, b):
-            a.extend(b)
-            del a[limit:]
-            return a
-
-    return ErrorSamples()
+    def _write_rows(self, sql: str, chunk: list[tuple], counts_matter: bool) -> int:
+        cur, stats = self.cur, self.stats
+        written = 0
+        last_exc: Exception | None = None
+        for row in chunk:
+            cur.execute("SAVEPOINT apply_row")
+            try:
+                cur.execute(sql, row)
+                if counts_matter:
+                    self._track_shortfall(1)
+                written += 1
+            except Exception as exc:
+                cur.execute("ROLLBACK TO SAVEPOINT apply_row")
+                last_exc = exc
+                stats.errors += 1
+                if len(stats.error_samples) < _MAX_ERROR_SAMPLES:
+                    stats.error_samples.append(f"{sql} :: {row!r} :: {exc!r}"[:500])
+            cur.execute("RELEASE SAVEPOINT apply_row")
+        if written == 0:
+            # every row failed: bad rows, or a dead connection? A
+            # liveness probe decides — genuinely-bad whole chunks (all
+            # rows violate a constraint) stay quarantined, but a
+            # connection that no longer answers ABORTS the apply instead
+            # of mislabeling its entire contents as quarantined rows
+            try:
+                cur.execute("SELECT 1")
+                cur.fetchone()
+            except Exception:
+                raise RuntimeError(
+                    f"entire chunk of {len(chunk)} rows failed and the "
+                    "connection no longer answers — connection-level "
+                    "failure, aborting apply"
+                ) from last_exc
+        return written
 
 
 class DbapiTarget(DataTarget):
@@ -163,7 +192,13 @@ class DbapiTarget(DataTarget):
         self.soft_delete = soft_delete
         self.id_prefix = id_prefix
         self.batch_size = batch_size
-        self.write_partitions = write_partitions
+        if write_partitions is not None:
+            warnings.warn(
+                "DbapiTarget: write_partitions is ignored — apply writes "
+                "over one driver connection",
+                UserWarning,
+                stacklevel=2,
+            )
         if paramstyle not in _PARAMSTYLES:
             raise ValueError(
                 f"unsupported paramstyle {paramstyle!r}: this sink generates "
@@ -218,25 +253,31 @@ class DbapiTarget(DataTarget):
         ]
 
     def apply(self, spark: SparkSession, cdc: DataFrame) -> ApplyStats:
+        """Write ``cdc`` over one driver connection, in one transaction.
+
+        Rows reach the driver through ``toLocalIterator(prefetchPartitions=True)``.
+        Each change type gathers ``batch_size`` rows into a chunk, written
+        by one ``executemany`` under a chunk savepoint; a failed chunk is
+        rolled back to it and retried row by row, each row under its own
+        savepoint, so bad rows are quarantined and good rows kept (O3).
+        The connection commits once, after the last chunk. Any exception
+        before that rolls the whole change set back, closes the
+        connection and propagates."""
         attr_cols = self._attr_columns(cdc)
         ph = self.placeholder
         table = self.table
         id_col, ver_col, hid_col = self.id_column, self.version_column, self.hidden_column
-        soft = self.soft_delete
-        batch = self.batch_size
-        factory = self.connection_factory
 
         write_id = F.col(ID_COL)
         if self.id_prefix:
             write_id = F.concat(F.lit(self.id_prefix), write_id)
 
+        # payload rows are (wid, *attrs[, ver], change_type)
         cols_for_write = [write_id.alias("__wid")] + [F.col(c) for c in attr_cols]
         if ver_col:
             src_ver = F.col(VERSION_COL) if VERSION_COL in cdc.columns else F.lit(None)
             cols_for_write.append(src_ver.cast("long").alias("__wver"))
         payload = cdc.select(*cols_for_write, F.col(CHANGE_TYPE_COL))
-        if self.write_partitions:
-            payload = payload.repartition(self.write_partitions)
 
         insert_cols = [id_col] + attr_cols + ([ver_col] if ver_col else [])
         insert_sql = (
@@ -251,158 +292,50 @@ class DbapiTarget(DataTarget):
         update_sql = (
             f"UPDATE {table} SET {', '.join(set_parts)} WHERE {id_col} = {ph}"
         )
-        if soft and hid_col:
+        if self.soft_delete and hid_col:
             remove_sql = f"UPDATE {table} SET {hid_col} = 1 WHERE {id_col} = {ph}"
         else:
             remove_sql = f"DELETE FROM {table} WHERE {id_col} = {ph}"
 
-        sc = spark.sparkContext
-        err_acc = sc.accumulator(0)
-        add_acc = sc.accumulator(0)
-        upd_acc = sc.accumulator(0)
-        rem_acc = sc.accumulator(0)
-        unmatched_acc = sc.accumulator(0)
-        sample_acc = sc.accumulator([], _make_error_samples_param(_MAX_ERROR_SAMPLES))
-
-        has_ver = ver_col is not None
-        ct_col = CHANGE_TYPE_COL
-        ct_add, ct_update = ChangeType.ADD, ChangeType.UPDATE
-
-        # Self-contained closure: write_partition captures plain values,
-        # the nested replay probe and accumulators whose param class is
-        # local to its factory, so cloudpickle ships all of it by value
-        # and Python workers never import this package (tested from a
-        # foreign cwd without PYTHONPATH).
-        replay_probe = _make_replay_probe(table, id_col, ph, insert_cols)
-
-        def write_partition(rows_iter) -> None:
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            is_retry_attempt = ctx is not None and ctx.attemptNumber() > 0
-            conn = factory()
-            try:
-                cur = conn.cursor()
-
-                def chunks(rows: list, size: int):
-                    for i in range(0, len(rows), size):
-                        yield rows[i : i + size]
-
-                def track_shortfall(n_rows: int) -> None:
-                    # UPDATE/DELETE matching zero rows: the driver's
-                    # rowcount (when reliable, i.e. >= 0) reveals how
-                    # many statements wrote nothing — out-of-band drift
-                    # the next diff re-converges; surfaced, not hidden
-                    rc = cur.rowcount
-                    if rc is not None and 0 <= rc < n_rows:
-                        unmatched_acc.add(n_rows - rc)
-
-                def run_batch(
-                    sql: str, params: list[tuple], acc,
-                    is_insert: bool = False, counts_matter: bool = False,
-                ) -> None:
-                    for chunk in chunks(params, batch):
-                        try:
-                            cur.executemany(sql, chunk)
-                            if counts_matter:
-                                track_shortfall(len(chunk))
-                            conn.commit()
-                            acc.add(len(chunk))
-                        except Exception:
-                            # O3: retry row-by-row, quarantine bad rows
-                            conn.rollback()
-                            chunk_errors = 0
-                            last_exc: Exception | None = None
-                            for row in chunk:
-                                try:
-                                    cur.execute(sql, row)
-                                    if counts_matter:
-                                        track_shortfall(1)
-                                    conn.commit()
-                                    acc.add(1)
-                                except Exception as exc:
-                                    conn.rollback()
-                                    if (
-                                        is_insert
-                                        and is_retry_attempt
-                                        and replay_probe(conn, cur, row)
-                                    ):
-                                        # at-least-once replay: a prior
-                                        # attempt of THIS task committed
-                                        # this exact row (its accumulator
-                                        # adds were discarded, its commit
-                                        # was not) — correct accounting is
-                                        # "added", not "error". Gated on
-                                        # attemptNumber so FIRST attempts
-                                        # keep duplicate-add-is-an-error.
-                                        acc.add(1)
-                                        continue
-                                    chunk_errors += 1
-                                    last_exc = exc
-                                    err_acc.add(1)
-                                    sample_acc.add(
-                                        [f"{sql} :: {row!r} :: {exc!r}"[:500]]
-                                    )
-                            if chunk and chunk_errors == len(chunk):
-                                # every row failed: bad rows, or a dead
-                                # connection? A liveness probe decides —
-                                # genuinely-bad whole chunks (all rows
-                                # violate a constraint) stay quarantined,
-                                # but a connection that no longer answers
-                                # ABORTS the partition instead of
-                                # mislabeling its entire contents as
-                                # quarantined rows
-                                try:
-                                    cur.execute("SELECT 1")
-                                    cur.fetchone()
-                                except Exception:
-                                    raise RuntimeError(
-                                        f"entire chunk of {len(chunk)} rows "
-                                        "failed and the connection no longer "
-                                        "answers — connection-level failure, "
-                                        "aborting partition"
-                                    ) from last_exc
-
-                inserts: list[tuple] = []
-                updates: list[tuple] = []
-                removes: list[tuple] = []
-                for row in rows_iter:
-                    wid = row["__wid"]
-                    attrs = tuple(row[c] for c in attr_cols)
-                    ver = (row["__wver"],) if has_ver else ()
-                    ct = row[ct_col]
-                    if ct == ct_add:
-                        inserts.append((wid,) + attrs + ver)
-                    elif ct == ct_update:
-                        updates.append(attrs + ver + (wid,))
-                    else:
-                        removes.append((wid,))
-                    if len(inserts) >= batch:
-                        run_batch(insert_sql, inserts, add_acc, is_insert=True)
-                        inserts = []
-                    if len(updates) >= batch:
-                        run_batch(update_sql, updates, upd_acc,
-                                  counts_matter=True)
-                        updates = []
-                    if len(removes) >= batch:
-                        run_batch(remove_sql, removes, rem_acc,
-                                  counts_matter=True)
-                        removes = []
-                run_batch(insert_sql, inserts, add_acc, is_insert=True)
-                run_batch(update_sql, updates, upd_acc, counts_matter=True)
-                run_batch(remove_sql, removes, rem_acc, counts_matter=True)
-            finally:
-                conn.close()
-
-        payload.foreachPartition(write_partition)
-        return ApplyStats(
-            added=add_acc.value,
-            updated=upd_acc.value,
-            removed=rem_acc.value,
-            errors=err_acc.value,
-            unmatched=unmatched_acc.value,
-            error_samples=list(sample_acc.value),
-        )
+        stats = ApplyStats()
+        inserts: list[tuple] = []
+        updates: list[tuple] = []
+        removes: list[tuple] = []
+        conn = self.connection_factory()
+        try:
+            cur = conn.cursor()
+            # never released: see the module docstring's delivery section
+            cur.execute("SAVEPOINT apply_run")
+            writer = _ChunkWriter(cur, stats)
+            for row in payload.toLocalIterator(prefetchPartitions=True):
+                ct = row[-1]
+                if ct == ChangeType.ADD:
+                    inserts.append(row[:-1])
+                elif ct == ChangeType.UPDATE:
+                    updates.append(row[1:-1] + (row[0],))
+                else:
+                    removes.append((row[0],))
+                if len(inserts) >= self.batch_size:
+                    stats.added += writer.write(insert_sql, inserts)
+                    inserts = []
+                if len(updates) >= self.batch_size:
+                    stats.updated += writer.write(update_sql, updates, counts_matter=True)
+                    updates = []
+                if len(removes) >= self.batch_size:
+                    stats.removed += writer.write(remove_sql, removes, counts_matter=True)
+                    removes = []
+            stats.added += writer.write(insert_sql, inserts)
+            stats.updated += writer.write(update_sql, updates, counts_matter=True)
+            stats.removed += writer.write(remove_sql, removes, counts_matter=True)
+            conn.commit()
+        except BaseException:
+            # the abort's own error is what the caller needs to see
+            with contextlib.suppress(Exception):
+                conn.rollback()
+            raise
+        finally:
+            conn.close()
+        return stats
 
     def remove_all(self, spark: SparkSession) -> int:
         """W4 — DELETE FROM, count first (``DbalTarget.php:160-167``)."""
