@@ -5500,6 +5500,7 @@ def test_append_recovery_fuzz_protocol_mutations(spark, tmp_path):
     import random
     import shutil
 
+    from wwwision_importservice_spark.fsutil import _backup_path
     from wwwision_importservice_spark.operators.packing import (
         append_packed_shards,
     )
@@ -5529,7 +5530,7 @@ def test_append_recovery_fuzz_protocol_mutations(spark, tmp_path):
                     f.truncate(max(1, len(f.read()) // 2))
         elif kind == "half_swap_backup":
             # crash between the two renames: backup holds the only copy
-            shutil.move(man, man + "__replaced")
+            shutil.move(man, _backup_path(man))
 
     kinds = ["drop_manifest", "drop_state", "truncate_manifest",
              "truncate_state", "half_swap_backup", "none"]

@@ -57,7 +57,13 @@ def _unresolved(module: str, name: str | None) -> str | None:
         return f"module {module}: {exc}"
     if name is None or hasattr(mod, name):
         return None
-    return f"{module} defines no {name}"
+    try:
+        # ``from package import submodule`` names a submodule that is an
+        # attribute of the package only once something has imported it
+        importlib.import_module(f"{module}.{name}")
+    except ImportError:
+        return f"{module} defines no {name}"
+    return None
 
 
 def test_package_imports_resolve():

@@ -19,13 +19,13 @@ from wwwision_importservice_spark.sinks.parquet import ParquetTarget
 from wwwision_importservice_spark.sources.memory import CallableSource
 
 
-def make_preset(tmp_path, rows, mapper=None, **kwargs) -> Preset:
+def make_preset(tmp_path, rows, mapper=None, target=None, **kwargs) -> Preset:
     return Preset(
         name="test",
         source=CallableSource(
             rows=rows, schema="id string, v long, title string, _ord long"
         ),
-        target=ParquetTarget(
+        target=target or ParquetTarget(
             path=str(tmp_path / "tgt"), id_column="id", version_column="version"
         ),
         id_attribute="id",
@@ -558,6 +558,146 @@ def test_replay_changelog_helper_and_discovery(spark, tmp_path):
 
     with pytest.raises(ImportServiceError, match="does not exist"):
         replay_changelog(spark, replica, str(tmp_path / "nope"))
+
+
+def _sync_and_crash_mid_swap(pipeline, path):
+    """Run a sync, then leave ``path`` as a crash between the two renames
+    of ``fsutil.replace_dir`` would: the previous snapshot in the swap
+    backup, the new one in ``<path>.staging``, and no changelog entry."""
+    import os
+    import shutil
+
+    from wwwision_importservice_spark.fsutil import _backup_path
+
+    before = path + ".before"
+    shutil.copytree(path, before)
+    pipeline.run()
+    os.rename(path, path + ".staging")
+    os.rename(before, _backup_path(path))
+
+
+def test_parquet_crash_mid_swap_retry_applies_the_same_changes(spark, tmp_path):
+    """A sync that dies between the snapshot swap's two renames loses
+    nothing: the retried run diffs against the previous snapshot, so it
+    reports the same update and remove, the removed row stays hidden,
+    and a replica replayed from the changelog equals the primary."""
+    from wwwision_importservice_spark.plans.pipeline import replay_changelog
+
+    def soft(name):
+        return ParquetTarget(
+            path=str(tmp_path / name), id_column="id",
+            version_column="version", soft_delete=True,
+        )
+
+    preset = make_preset(
+        tmp_path, [("a", 1, "t1", 1), ("b", 1, "t2", 2), ("c", 1, "t3", 3)],
+        target=soft("tgt"),
+    )
+    pipeline = ImportPipeline(preset, spark)
+    clog = str(tmp_path / "clog")
+    pipeline.run(changelog_dir=clog, run_id="r1")
+
+    preset.source.rows = [("a", 2, "t1b", 1), ("b", 1, "t2", 2)]
+    _sync_and_crash_mid_swap(pipeline, preset.target.path)
+    stats = pipeline.run(changelog_dir=clog, run_id="r2")
+    assert stats == {"added": 0, "updated": 1, "removed": 1, "errors": 0}
+
+    def rows(path):
+        return {
+            r["id"]: (r["version"], r["title"], r["hidden"])
+            for r in spark.read.parquet(path).collect()
+        }
+
+    primary = rows(preset.target.path)
+    assert primary == {
+        "a": (2, "t1b", False), "b": (1, "t2", False), "c": (1, "t3", True)
+    }
+    replica = soft("replica")
+    assert replay_changelog(spark, replica, clog)["runs"] == 2
+    assert rows(replica.path) == primary
+
+
+def test_scd2_crash_mid_swap_retry_keeps_history(spark, tmp_path):
+    """The SCD2 target under the same crash: the retried run closes a and
+    c at run 2, every earlier version survives in ``history()``, and a
+    replica replayed from the changelog has the same history."""
+    from wwwision_importservice_spark.plans.pipeline import replay_changelog
+    from wwwision_importservice_spark.sinks.scd2 import Scd2ParquetTarget
+
+    def scd2(name):
+        return Scd2ParquetTarget(
+            path=str(tmp_path / name), id_column="id", version_column="version"
+        )
+
+    preset = make_preset(
+        tmp_path, [("a", 1, "t1", 1), ("b", 1, "t2", 2), ("c", 1, "t3", 3)],
+        target=scd2("tgt"),
+    )
+    pipeline = ImportPipeline(preset, spark)
+    clog = str(tmp_path / "clog")
+    pipeline.run(changelog_dir=clog, run_id="r1")
+
+    preset.source.rows = [("a", 2, "t1b", 1), ("b", 1, "t2", 2)]
+    _sync_and_crash_mid_swap(pipeline, preset.target.path)
+    stats = pipeline.run(changelog_dir=clog, run_id="r2")
+    assert stats == {"added": 0, "updated": 1, "removed": 1, "errors": 0}
+
+    def history(target):
+        return sorted(
+            (r["id"], r["version"], r["title"], r["valid_from"],
+             r["valid_to"], r["is_current"])
+            for r in target.history(spark).collect()
+        )
+
+    primary = history(preset.target)
+    assert primary == [
+        ("a", 1, "t1", 1, 2, False),
+        ("a", 2, "t1b", 2, None, True),
+        ("b", 1, "t2", 1, None, True),
+        ("c", 1, "t3", 1, 2, False),
+    ]
+    replica = scd2("replica")
+    replay_changelog(spark, replica, clog)
+    assert history(replica) == primary
+
+
+def test_changelog_crash_mid_commit_backup_stays_hidden(spark, tmp_path):
+    """A crash between the two renames of a changelog commit leaves the
+    previous ``run_id=X`` in the swap backup. Neither a reader of the
+    changelog root nor ``replay_changelog`` sees that backup, and
+    re-running X restores it and then replaces it."""
+    import os
+    import shutil
+
+    from wwwision_importservice_spark.fsutil import _backup_path, path_exists
+    from wwwision_importservice_spark.plans.pipeline import replay_changelog
+
+    preset = make_preset(tmp_path, [("a", 1, "t1", 1), ("b", 2, "t2", 2)])
+    pipeline = ImportPipeline(preset, spark)
+    clog = str(tmp_path / "clog")
+    pipeline.run(changelog_dir=clog, run_id="r1")
+    preset.source.rows = [("a", 9, "t1b", 1), ("b", 2, "t2", 2)]
+    pipeline.run(changelog_dir=clog, run_id="r2")
+
+    run_dir, staging = f"{clog}/run_id=r2", f"{clog}/.staging_run_id=r2"
+    shutil.copytree(run_dir, staging)
+    os.rename(run_dir, _backup_path(run_dir))
+
+    seen = {r["run_id"] for r in spark.read.parquet(clog).collect()}
+    assert seen == {"r1"}
+    replica = ParquetTarget(
+        path=str(tmp_path / "replica"), id_column="id", version_column="version"
+    )
+    assert replay_changelog(spark, replica, clog)["runs"] == 1
+
+    # the re-run's change set is empty (the target already holds r2):
+    # its commit restores the backup, then replaces it with the new run
+    assert pipeline.run(changelog_dir=clog, run_id="r2")["updated"] == 0
+    assert not path_exists(spark, _backup_path(run_dir))
+    assert not path_exists(spark, staging)
+    assert spark.read.parquet(run_dir).count() == 0
+    seen = {r["run_id"] for r in spark.read.parquet(clog).collect()}
+    assert seen == {"r1"}  # r2 is an empty run now
 
 
 def test_quality_checks_gate_the_run(spark, sf_dir, tmp_path):

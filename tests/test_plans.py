@@ -820,3 +820,32 @@ def test_no_python_row_frames_in_dedup_sinks_streaming():
                 offenders.append(f"{path.relative_to(root)}:{node.lineno}")
     assert len(files) > 3
     assert offenders == [], offenders
+
+
+def test_only_fsutil_swaps_directories_in_sinks_and_pipeline():
+    """Source guard: the parquet and SCD2 sinks and the pipeline swap and
+    delete directories only through ``fsutil`` (``replace_dir``,
+    ``recover_dir``, ``delete_dir``), so one crash protocol and one
+    hidden backup name cover the snapshot and the changelog commit."""
+    import ast
+    import pathlib
+
+    import wwwision_importservice_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    files = [
+        root / "sinks" / "parquet.py",
+        root / "sinks" / "scd2.py",
+        root / "plans" / "pipeline.py",
+    ]
+    banned = {("os", "rename"), ("os", "replace"), ("shutil", "rmtree"),
+              ("shutil", "move")}
+    offenders = []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Attribute):
+                continue
+            owner = node.value.id if isinstance(node.value, ast.Name) else None
+            if (owner, node.attr) in banned or node.attr == "getFileSystem":
+                offenders.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert offenders == [], offenders

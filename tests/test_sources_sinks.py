@@ -1149,9 +1149,9 @@ def test_recluster_recovers_append_degraded_pruning(spark, tmp_path):
     assert files_touched(got.filter(pred)) <= 2
     assert got.filter(pred).count() == 200 + 80 * 4
     # no backup/tmp residue from the crash-safe swap
-    from wwwision_importservice_spark.fsutil import path_exists
+    from wwwision_importservice_spark.fsutil import _backup_path, path_exists
 
-    assert not path_exists(spark, path + "__replaced")
+    assert not path_exists(spark, _backup_path(path))
     assert not path_exists(spark, path + "__reclustering")
 
 
@@ -1405,10 +1405,10 @@ def test_dbapi_failed_sync_leaves_target_and_replica_consistent(spark, tmp_path)
 
 
 def test_dbapi_apply_needs_no_package_on_worker_path(tmp_path):
-    """Python workers start in the driver's working directory with the
-    driver's PYTHONPATH, not its sys.path. A driver started elsewhere,
-    with the package only on sys.path, must still apply: everything the
-    foreachPartition closure needs ships by value."""
+    """A driver started from a foreign working directory, with the
+    package only on its sys.path and no PYTHONPATH, must still apply:
+    the apply writes from the driver and starts no Python worker, which
+    would need the package on its own path."""
     db = tmp_path / "t.db"
     conn = sqlite3.connect(db)
     conn.execute(

@@ -1394,6 +1394,7 @@ def test_replace_dir_crash_window_recovers_index(spark, tmp_path):
     import os
 
     from wwwision_importservice_spark.fsutil import (
+        _backup_path,
         list_data_files,
         path_exists,
         recover_dir,
@@ -1419,11 +1420,11 @@ def test_replace_dir_crash_window_recovers_index(spark, tmp_path):
     spark.read.parquet(idx).coalesce(1).write.partitionBy("band").parquet(tmp_copy)
     replace_dir(spark, tmp_copy, idx)
     assert path_exists(spark, idx)
-    assert not path_exists(spark, idx + "__replaced")
+    assert not path_exists(spark, _backup_path(idx))
     assert set(list_data_files(spark, idx)) != files_before  # really swapped
 
     # simulate the crash window: dst renamed away, src never landed
-    os.rename(idx, idx + "__replaced")
+    os.rename(idx, _backup_path(idx))
     assert not path_exists(spark, idx)
 
     # recover_dir restores it...
@@ -1434,7 +1435,7 @@ def test_replace_dir_crash_window_recovers_index(spark, tmp_path):
     # ...and the gate itself self-heals mid-stream: re-break, then feed
     # a twin of doc 0 — it must be DROPPED, not admitted against a
     # 'never written' index
-    os.rename(idx, idx + "__replaced")
+    os.rename(idx, _backup_path(idx))
     gate(
         spark.createDataFrame(
             [(5, base + " reprise"), (6, "totally novel content here")],
@@ -1453,7 +1454,11 @@ def test_replace_dir_restores_backup_when_dst_missing(spark, tmp_path):
     gate's explicit recover_dir probe."""
     import os
 
-    from wwwision_importservice_spark.fsutil import path_exists, replace_dir
+    from wwwision_importservice_spark.fsutil import (
+        _backup_path,
+        path_exists,
+        replace_dir,
+    )
     from wwwision_importservice_spark.operators.dedup import (
         compact_index,
         lsh_index,
@@ -1471,22 +1476,22 @@ def test_replace_dir_restores_backup_when_dst_missing(spark, tmp_path):
 
     # open the crash window, then run a NEW swap over it: the old state
     # must survive into the backup-restore, and the new src must land
-    os.rename(idx, idx + "__replaced")
+    os.rename(idx, _backup_path(idx))
     src = str(tmp_path / "src")
     spark.createDataFrame([(9, 0, "x")], "doc_id long, band int, sig string")\
         .write.partitionBy("band").parquet(src)
     replace_dir(spark, src, idx)
     assert path_exists(spark, idx)
-    assert not path_exists(spark, idx + "__replaced")
+    assert not path_exists(spark, _backup_path(idx))
     assert spark.read.parquet(idx).count() == 1  # the new src won the swap
 
     # compact_index on a mid-swap index: recovers, then compacts
     lsh_index(sig, "doc_id", 16, 4).write.mode("overwrite")\
         .partitionBy("band").parquet(idx)
-    os.rename(idx, idx + "__replaced")
+    os.rename(idx, _backup_path(idx))
     compact_index(spark, idx, "doc_id")
     assert spark.read.parquet(idx).count() == rows_before
-    assert not path_exists(spark, idx + "__replaced")
+    assert not path_exists(spark, _backup_path(idx))
 
 
 def test_stats_hook_under_real_stream_engine(spark, tmp_path):

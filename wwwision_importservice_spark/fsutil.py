@@ -1,4 +1,5 @@
-"""Tiny Hadoop-filesystem helpers shared by operators and streaming.
+"""Tiny Hadoop-filesystem helpers shared by operators, sinks and the
+pipeline.
 
 The recurring need: "read this parquet state directory, or start fresh
 iff it has never been written". A bare ``try/except Exception`` around
@@ -9,6 +10,14 @@ corrupts downstream invariants. The explicit existence probe keeps
 "missing" and "broken" distinguishable: only the former maps to
 "first run"; the latter propagates so the caller (a micro-batch, a
 pipeline run) retries.
+
+This is also the only module that renames a directory. Every state
+directory rewritten whole (the parquet and SCD2 sink snapshots, a
+changelog run, the LSH/ANN indexes, the sketch store, packing
+manifests, a reclustered table) is committed by :func:`replace_dir`
+and read after :func:`recover_dir`, so one crash protocol covers them
+all. Its backup is the hidden sibling ``.<name>__replaced``, which
+Spark's partition discovery and ``run_id=`` listings never see.
 """
 
 from __future__ import annotations
@@ -60,7 +69,10 @@ def list_child_dirs(spark: SparkSession, path: str) -> list[str]:
 
 
 def _backup_path(dst: str) -> str:
-    return dst.rstrip("/") + "__replaced"
+    # a dot-prefixed sibling: hidden from hive partition discovery, so
+    # the backup of a changelog's run_id=X never reads as a run of its own
+    parent, sep, name = dst.rstrip("/").rpartition("/")
+    return f"{parent}{sep}.{name}__replaced"
 
 
 def replace_dir(spark: SparkSession, src: str, dst: str) -> None:
@@ -70,10 +82,12 @@ def replace_dir(spark: SparkSession, src: str, dst: str) -> None:
     simply GONE: a stateful caller's "does my state dir exist?" probe
     then reads "never written" and silently resets state (for the
     near-dup gate that means admitting a whole batch of duplicates).
-    Here ``dst`` is first RENAMED to a sibling ``<dst>__replaced``
-    backup, ``src`` renamed into place, and only then the backup
-    deleted — at every intermediate point the prior state survives
-    under one of the two names, and :func:`recover_dir` restores it.
+    Here ``dst`` is first RENAMED to the hidden sibling backup
+    ``.<name>__replaced`` (:func:`_backup_path`), ``src`` renamed into
+    place, and only then the backup deleted — at every intermediate
+    point the prior state survives under one of the two names, and
+    :func:`recover_dir` (or the next ``replace_dir`` of the same
+    ``dst``) restores it.
 
     Still NOT atomic on object stores (multiple namespace ops); callers
     must ensure no concurrent reader — e.g. compaction runs
@@ -109,7 +123,7 @@ def replace_dir(spark: SparkSession, src: str, dst: str) -> None:
 
 def recover_dir(spark: SparkSession, dst: str) -> bool:
     """Restore ``dst`` from a :func:`replace_dir` backup interrupted
-    mid-swap: a present ``<dst>__replaced`` with ``dst`` missing is the
+    mid-swap: a present backup with ``dst`` missing is the
     crash window between the two renames — the backup IS the state, so
     rename it back. Returns True iff a restore happened. Stateful
     readers (the near-dup gate's index probe) call this before their

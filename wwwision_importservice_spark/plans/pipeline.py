@@ -20,6 +20,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from wwwision_importservice_spark import fsutil
 from wwwision_importservice_spark.errors import ImportServiceError
 from wwwision_importservice_spark.operators.diff import (
     CHANGE_TYPE_COL,
@@ -61,23 +62,20 @@ def replay_changelog(
 
     ``runs=None`` discovers ``run_id=*`` directories and applies them in
     LEXICOGRAPHIC order — use sortable run ids (zero-padded sequence
-    numbers or ISO timestamps) or pass the order explicitly. Staging and
-    parked directories (``.staging_*`` / ``.prev_*``) are never replayed
-    — only committed runs exist under ``run_id=``.
+    numbers or ISO timestamps) or pass the order explicitly. Staging
+    directories and swap backups (``.staging_run_id=*`` /
+    ``.run_id=*__replaced``) are hidden and never replayed — only
+    committed runs exist under ``run_id=``.
     """
     if runs is None:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(changelog_dir)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(hpath):
+        if not fsutil.path_exists(spark, changelog_dir):
             raise ImportServiceError(
                 f'Changelog directory "{changelog_dir}" does not exist'
             )
-        names = [
-            s.getPath().getName() for s in fs.listStatus(hpath)
-        ]
         runs = sorted(
-            n.split("=", 1)[1] for n in names if n.startswith("run_id=")
+            n.split("=", 1)[1]
+            for n in fsutil.list_child_dirs(spark, changelog_dir)
+            if n.startswith("run_id=")
         )
     totals = {"added": 0, "updated": 0, "removed": 0, "errors": 0, "runs": 0}
     base = changelog_dir.rstrip("/")
@@ -161,15 +159,21 @@ class ImportPipeline:
         partitioned by change_type — the audit/incremental-consumer feed
         (Delta CDF shape) downstream jobs read instead of re-diffing.
 
-        Changelog consistency contract: the CDC frame is STAGED to a
-        hidden sibling directory before ``target.apply`` (it must be
-        materialized pre-apply — its lineage reads the target's current
-        state, which apply rewrites) and COMMITTED to ``run_id=<id>/``
-        by a filesystem rename only after apply succeeds. A failed sync
+        Changelog consistency contract: the CDC frame is STAGED to the
+        hidden sibling ``.staging_run_id=<id>/`` before ``target.apply``
+        (it must be materialized pre-apply — its lineage reads the
+        target's current state, which apply rewrites) and COMMITTED to
+        ``run_id=<id>/`` by :func:`fsutil.replace_dir` only after apply
+        succeeds; a failed apply deletes the staging. A failed sync
         leaves no changelog entries to replay-diverge from the primary,
         and re-running a run id replaces its directory — idempotent,
-        never append-duplicating CDC rows. Records quarantined by the
-        sink (``ApplyStats.errors``) still appear in the changelog: it
+        never append-duplicating CDC rows. A crash inside the commit
+        leaves the previous ``run_id=<id>/`` in the hidden backup
+        ``.run_id=<id>__replaced``, which the next commit of that run id
+        restores before it swaps. The target swap and this commit are
+        two swaps: a crash between them leaves the run applied with no
+        changelog entry. Records quarantined by the sink
+        (``ApplyStats.errors``) still appear in the changelog: it
         documents the computed change set, not per-record sink
         outcomes."""
         cdc = self.compute_changes(force_updates).cache()
@@ -224,7 +228,10 @@ class ImportPipeline:
                     # leaf-file DEPTH stays uniform with partitioned
                     # runs and a consumer reading the changelog ROOT
                     # (partition discovery over run_id=/change_type=)
-                    # never sees conflicting directory structures.
+                    # never sees conflicting directory structures. That
+                    # write replaces only its own partition, so first
+                    # drop any staging a crashed run left behind.
+                    fsutil.delete_dir(self.spark, staging)
                     (
                         mapped.drop(CHANGE_TYPE_COL)
                         .write.mode("overwrite")
@@ -242,12 +249,11 @@ class ImportPipeline:
                 stats = self.preset.target.apply(self.spark, mapped)
             except BaseException:
                 if staging is not None:
-                    self._fs_delete(staging)
+                    fsutil.delete_dir(self.spark, staging)
                 raise
 
-            # commit: rename staging -> run_id dir (replace on re-run)
             if staging is not None:
-                self._fs_commit(staging, run_dir)
+                fsutil.replace_dir(self.spark, staging, run_dir)
 
             if stats.errors:
                 self._dispatch(
@@ -270,52 +276,6 @@ class ImportPipeline:
             }
         finally:
             cdc.unpersist()
-
-    # -- changelog staging commit (Hadoop FS — any scheme Spark writes) -- #
-    def _hadoop_fs(self, path: str):
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        return hpath.getFileSystem(self.spark._jsc.hadoopConfiguration()), hpath
-
-    def _fs_delete(self, path: str) -> None:
-        fs, hpath = self._hadoop_fs(path)
-        if fs.exists(hpath):
-            fs.delete(hpath, True)
-
-    def _fs_commit(self, staging: str, final: str) -> None:
-        """Promote the staged run directory via a rename shuffle that
-        never deletes data before its replacement is in place: any
-        previous run dir is first RENAMED aside (to a dot-prefixed
-        sibling, hidden from partition discovery), then staging renames
-        into the final name, then the parked previous dir is deleted. A
-        crash between the renames leaves the run dir briefly absent but
-        BOTH generations intact on disk (the next run's commit clears
-        the parked dir) — strictly better than the delete-then-rename
-        window, where a crash destroyed the previous entries with the
-        new ones stranded in staging. Renames are atomic on HDFS/local;
-        on object stores they degrade to copy+delete — the standard
-        job-commit trade-off, acceptable because each run_id directory
-        is single-writer."""
-        base, name = final.rsplit("/", 1)
-        parked = f"{base}/.prev_{name}"
-        fs, final_p = self._hadoop_fs(final)
-        _, staging_p = self._hadoop_fs(staging)
-        _, parked_p = self._hadoop_fs(parked)
-        if fs.exists(parked_p):
-            fs.delete(parked_p, True)
-        had_prev = fs.exists(final_p)
-        if had_prev and not fs.rename(final_p, parked_p):
-            raise ImportServiceError(
-                f"Failed to park previous changelog {final}"
-            )
-        if not fs.rename(staging_p, final_p):
-            if had_prev:
-                fs.rename(parked_p, final_p)  # restore the previous run
-            raise ImportServiceError(
-                f"Failed to commit changelog {staging} -> {final}"
-            )
-        if had_prev:
-            fs.delete(parked_p, True)
 
     def _apply_mapping(self, cdc: DataFrame) -> DataFrame:
         """K11 at the set level: map attribute columns, carry engine columns."""

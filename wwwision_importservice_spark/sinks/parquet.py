@@ -3,8 +3,12 @@
 No reference counterpart (the reference writes to SQL tables / CR nodes);
 this is the idiomatic Spark sink for file-based targets: the new table
 state is computed as anti-join + union (the classic MERGE emulation when
-no Delta/Iceberg jars are available) and written as a fresh snapshot,
-then atomically swapped in.
+no Delta/Iceberg jars are available) and written as a fresh snapshot to
+the sibling ``<path>.staging``, then swapped in by
+:func:`fsutil.replace_dir`. A crash between its two renames leaves the
+previous snapshot in the hidden backup ``.<name>__replaced``; every
+read calls :func:`fsutil.recover_dir` first, so the retried run diffs
+against the previous snapshot, never against an empty target.
 
 Semantics parity:
 - hard delete drops removed rows (W3);
@@ -23,12 +27,12 @@ the writer for ``DeltaTable.merge`` is localized here.
 from __future__ import annotations
 
 import os
-import shutil
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wwwision_importservice_spark import fsutil
 from wwwision_importservice_spark.operators.diff import CHANGE_TYPE_COL, ChangeType
 from wwwision_importservice_spark.plans.result import Result
 from wwwision_importservice_spark.plans.schema import OptionsSchema
@@ -37,19 +41,33 @@ from wwwision_importservice_spark.session import local_frame
 from wwwision_importservice_spark.sinks.base import ApplyStats, DataTarget
 
 
-def swap_snapshot(df: DataFrame, path: str) -> None:
-    """Write ``df`` to a sibling staging dir, then swap it in (rmtree +
-    rename). THE one copy of the snapshot-commit discipline — shared by
-    every snapshot-rewriting sink so a change to the crash-window
-    semantics cannot silently miss one of them."""
-    staging = path.rstrip("/") + ".staging"
-    df.write.mode("overwrite").parquet(staging)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.rename(staging, path)
+class SnapshotTarget(DataTarget):
+    """A target stored as one parquet snapshot directory at ``path``,
+    rewritten whole by every apply (parquet, SCD2)."""
+
+    path: str
+
+    def exists(self) -> bool:
+        return self._present(SparkSession.active())
+
+    def _present(self, spark: SparkSession) -> bool:
+        # restore a swap a crash interrupted before probing, so that
+        # snapshot never reads as "never written"
+        fsutil.recover_dir(spark, self.path)
+        return fsutil.path_exists(spark, self.path)
+
+    def read(self, spark: SparkSession) -> DataFrame | None:
+        if not self._present(spark):
+            return None
+        return spark.read.parquet(self.path)
+
+    def _write_snapshot(self, df: DataFrame) -> None:
+        staging = self.path.rstrip("/") + ".staging"
+        df.write.mode("overwrite").parquet(staging)
+        fsutil.replace_dir(df.sparkSession, staging, self.path)
 
 
-class ParquetTarget(DataTarget):
+class ParquetTarget(SnapshotTarget):
     def __init__(
         self,
         path: str,
@@ -80,14 +98,6 @@ class ParquetTarget(DataTarget):
         )
 
     # ------------------------------------------------------------------ #
-    def exists(self) -> bool:
-        return os.path.exists(self.path)
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        if not self.exists():
-            return None
-        return spark.read.parquet(self.path)
-
     def current_state(self, spark: SparkSession) -> DataFrame:
         existing = self.read(spark)
         if existing is None:
@@ -192,14 +202,12 @@ class ParquetTarget(DataTarget):
         cdc.unpersist()
         return stats
 
-    def _write_snapshot(self, df: DataFrame) -> None:
-        swap_snapshot(df, self.path)
-
     def remove_all(self, spark: SparkSession) -> int:
         existing = self.read(spark)
-        count = existing.count() if existing is not None else 0
-        if self.exists():
-            shutil.rmtree(self.path)
+        if existing is None:
+            return 0
+        count = existing.count()
+        fsutil.delete_dir(spark, self.path)
         return count
 
     def compact(

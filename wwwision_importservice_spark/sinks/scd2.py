@@ -29,6 +29,10 @@ byte-identical history — event time belongs in the version
 column, bookkeeping in the sequence. Pass ``run_seq`` explicitly to pin
 runs to an external ledger (e.g. the pipeline's changelog run ids).
 
+Commit and read go through ``SnapshotTarget``, as for ``ParquetTarget``:
+a crash mid-swap loses no history, and the retried run gets its
+``run_seq`` again.
+
 Scale: same snapshot-rewrite trade-off as ``ParquetTarget`` (see its
 module header) — but only CURRENT rows of touched ids are rewritten;
 closed history is carried over untouched, so the per-run delta is
@@ -53,15 +57,15 @@ from wwwision_importservice_spark.plans.result import Result
 from wwwision_importservice_spark.plans.schema import OptionsSchema
 from wwwision_importservice_spark.record import ID_COL, VERSION_COL
 from wwwision_importservice_spark.session import local_frame
-from wwwision_importservice_spark.sinks.base import ApplyStats, DataTarget
-from wwwision_importservice_spark.sinks.parquet import swap_snapshot
+from wwwision_importservice_spark.sinks.base import ApplyStats
+from wwwision_importservice_spark.sinks.parquet import SnapshotTarget
 
 VALID_FROM_COL = "valid_from"
 VALID_TO_COL = "valid_to"
 IS_CURRENT_COL = "is_current"
 
 
-class Scd2ParquetTarget(DataTarget):
+class Scd2ParquetTarget(SnapshotTarget):
     def __init__(
         self,
         path: str,
@@ -86,14 +90,6 @@ class Scd2ParquetTarget(DataTarget):
         )
 
     # ------------------------------------------------------------------ #
-    def exists(self) -> bool:
-        return os.path.exists(self.path)
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        if not self.exists():
-            return None
-        return spark.read.parquet(self.path)
-
     def history(self, spark: SparkSession) -> DataFrame:
         """The full history table (every version of every id)."""
         existing = self.read(spark)
@@ -232,9 +228,6 @@ class Scd2ParquetTarget(DataTarget):
             return stats
         finally:
             cdc.unpersist()
-
-    def _write_snapshot(self, df: DataFrame) -> None:
-        swap_snapshot(df, self.path)
 
     def remove_all(self, spark: SparkSession) -> int:
         """W4 in SCD2: close every current row (history is the point —
