@@ -375,6 +375,200 @@ def test_dbapi_current_state_is_an_eager_snapshot(spark, sqlite_target):
     assert [tuple(r) for r in state.collect()] == [("a", 1, False)]
 
 
+def test_dbapi_current_state_plans_a_parquet_scan_without_a_job(spark, sqlite_target):
+    """The keyset reaches the diff as a file scan of the parquet spill,
+    not as a ``LocalRelation`` holding every row in a plan field that
+    each Catalyst rule copies, and reading it starts no Spark job."""
+    from wwwision_importservice_spark.sinks.dbapi import spill_root
+
+    target, db = sqlite_target
+    conn = sqlite3.connect(db)
+    conn.executemany(
+        "INSERT INTO records (id, version) VALUES (?, ?)",
+        [("1", 1), ("5", 1)],
+    )
+    conn.commit()
+    conn.close()
+    sc = spark.sparkContext
+    sc.setJobGroup("keyset-read", "current_state")
+    try:
+        state = target.current_state(spark)
+        assert sc.statusTracker().getJobIdsForGroup("keyset-read") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    src = spark.range(3).select(
+        F.col("id").cast("string").alias("_id"),
+        F.lit(2).cast("long").alias("_version"),
+    )
+    cdc = compute_changes(
+        src, state, local_id_col="id", local_version_col="version",
+        local_hidden_col="hidden",
+    )
+    plan = cdc._jdf.queryExecution().optimizedPlan()
+    assert "LocalRelation" not in plan.toString()
+    leaves = plan.collectLeaves()
+    scans = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            relation = leaf.relation()
+            roots = relation.location().rootPaths()
+            scans.append((
+                relation.fileFormat().toString(),
+                [str(roots.apply(j)) for j in range(roots.size())],
+            ))
+    assert len(scans) == 1
+    file_format, roots = scans[0]
+    assert file_format == "Parquet"
+    assert [Path(r.removeprefix("file:")).parent for r in roots] == [spill_root(spark)]
+    assert sorted((r["_id"], r["change_type"]) for r in cdc.collect()) == [
+        ("0", "add"), ("1", "update"), ("2", "add"), ("5", "remove"),
+    ]
+    target.release_state(spark)
+
+
+def _fetch_hooked_factory(db, before_fetch):
+    """A ``connection_factory`` for ``db`` whose cursors call
+    ``before_fetch()`` before every ``fetchmany``."""
+
+    class Cursor:
+        def __init__(self, cur):
+            self.cur = cur
+
+        def execute(self, *args):
+            return self.cur.execute(*args)
+
+        def fetchmany(self, size):
+            before_fetch()
+            return self.cur.fetchmany(size)
+
+    class Connection:
+        def __init__(self):
+            self.conn = sqlite3.connect(db)
+
+        def cursor(self):
+            return Cursor(self.conn.cursor())
+
+        def close(self):
+            self.conn.close()
+
+    return Connection
+
+
+def test_dbapi_current_state_memory_stays_flat_across_fetch_batches(
+    spark, sqlite_target
+):
+    """Python (``tracemalloc``) and Arrow (``total_allocated_bytes``)
+    memory, read at every ``fetchmany``, stays within one fetch batch
+    over six batches: each batch goes to the parquet spill before the
+    next one is fetched. ``tracemalloc`` alone cannot see Arrow buffers."""
+    import tracemalloc
+
+    import pyarrow as pa
+
+    from wwwision_importservice_spark.sinks.dbapi import KEYSET_FETCH_ROWS
+
+    target, db = sqlite_target
+    rows = [(f"r{i:07d}", i, i % 2) for i in range(6 * KEYSET_FETCH_ROWS)]
+    conn = sqlite3.connect(db)
+    conn.executemany("INSERT INTO records (id, version, hidden) VALUES (?, ?, ?)", rows)
+    conn.commit()
+    conn.close()
+    batch = rows[:KEYSET_FETCH_ROWS]
+    arrow_batch = pa.RecordBatch.from_pydict({
+        "id": [r[0] for r in batch],
+        "version": [r[1] for r in batch],
+        "hidden": [bool(r[2]) for r in batch],
+    }).get_total_buffer_size()
+
+    readings = []
+    target.connection_factory = _fetch_hooked_factory(
+        db,
+        lambda: readings.append(
+            (pa.total_allocated_bytes(), tracemalloc.get_traced_memory()[0])
+        ),
+    )
+    tracemalloc.start()
+    try:
+        state = target.current_state(spark)
+    finally:
+        tracemalloc.stop()
+    assert state.count() == len(rows)
+    target.release_state(spark)
+    assert len(readings) == 7  # six full batches, then the empty fetch
+    # from the second fetch on, one batch of tuples is alive at each
+    # reading; what it costs in Python is the rise over the first fetch
+    python_batch = readings[1][1] - readings[0][1]
+    arrow_growth = readings[-1][0] - readings[1][0]
+    python_growth = readings[-1][1] - readings[1][1]
+    assert arrow_growth < arrow_batch, (arrow_growth, arrow_batch, readings)
+    assert python_growth < python_batch, (python_growth, python_batch, readings)
+
+
+def test_dbapi_keyset_spill_is_released(spark, tmp_path, monkeypatch):
+    """The spill is deleted after a successful run, after a run whose
+    apply raises, after ``explain()``, and by a ``current_state`` whose
+    fetch raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wwwision_importservice_spark.plans.pipeline import Events, ImportPipeline
+    from wwwision_importservice_spark.plans.preset import Preset
+    from wwwision_importservice_spark.sinks.dbapi import spill_root
+
+    src = tmp_path / "src.parquet"
+    pq.write_table(pa.table({"id": ["a", "b"], "title": ["x", "y"]}), src)
+    db = str(tmp_path / "t.db")
+    conn = sqlite3.connect(db)
+    conn.execute("CREATE TABLE records (id TEXT PRIMARY KEY, title TEXT)")
+    conn.execute("INSERT INTO records VALUES ('a', 'x'), ('z', 'z')")
+    conn.commit()
+    conn.close()
+    target = DbapiTarget(
+        connection_factory=functools.partial(sqlite3.connect, db), table="records"
+    )
+    preset = Preset(
+        name="spill", source=FileSource(path=str(src), format="parquet"),
+        target=target, id_attribute="id",
+    )
+    root = spill_root(spark)
+    root.mkdir(parents=True, exist_ok=True)
+    before = set(os.listdir(root))
+
+    def new_spills():
+        return set(os.listdir(root)) - before
+
+    seen = []
+    pipeline = ImportPipeline(preset, spark)
+    pipeline.on(Events.PRE_IMPORT_DATA, lambda cdc: seen.append(new_spills()))
+    assert pipeline.run()["added"] == 1
+    assert len(seen[-1]) == 1 and new_spills() == set()
+
+    def broken_apply(spark, cdc):
+        raise RuntimeError("apply failed")
+
+    monkeypatch.setattr(target, "apply", broken_apply)
+    with pytest.raises(RuntimeError, match="apply failed"):
+        pipeline.run()
+    assert len(seen[-1]) == 1 and new_spills() == set()
+
+    assert "Scan parquet" in pipeline.explain()
+    assert new_spills() == set()
+
+    fetches = []
+
+    def fail_after_first_batch():
+        fetches.append(1)
+        if len(fetches) > 1:
+            raise sqlite3.OperationalError("fetch failed")
+
+    target.connection_factory = _fetch_hooked_factory(db, fail_after_first_batch)
+    with pytest.raises(sqlite3.OperationalError, match="fetch failed"):
+        target.current_state(spark)
+    assert new_spills() == set()
+
+
 def test_bucketed_target_lifecycle(spark, tmp_path):
     """BucketedParquetTarget: two sync applies with a generation swap —
     same MERGE semantics as ParquetTarget, state persisted bucketed."""
@@ -613,6 +807,25 @@ def test_dbapi_connection_failure_aborts(spark, tmp_path):
     )
     with pytest.raises(Exception, match="unreachable"):
         target.apply(spark, make_cdc(spark, [("a", 1, "t", "add")]))
+
+
+def test_file_sinks_probe_through_hadoop_filesystem(spark, tmp_path):
+    """A ``file:///`` target path works in ``setup()`` and ``compact()``
+    as it does in ``apply``: both probe through the Hadoop filesystem,
+    not through ``os`` calls that read the URI as a relative path."""
+    from wwwision_importservice_spark.sinks.scd2 import Scd2ParquetTarget
+
+    uri = tmp_path.as_uri()
+    target = ParquetTarget(path=f"{uri}/tgt", id_column="id", version_column="version")
+    assert not target.setup(spark).has_errors
+    target.apply(spark, make_cdc(spark, [("a", 1, "t", "add"), ("b", 2, "t", "add")]).repartition(2))
+    assert not target.setup(spark).has_errors
+    assert target.compact(spark) == 1
+    assert sorted(r["id"] for r in spark.read.parquet(f"{uri}/tgt").collect()) == ["a", "b"]
+    scd2 = Scd2ParquetTarget(path=f"{uri}/scd2", id_column="id")
+    assert not scd2.setup(spark).has_errors
+    assert Scd2ParquetTarget(path=f"{uri}/missing/scd2").setup(spark).has_errors
+    assert ParquetTarget(path=f"{uri}/missing/tgt").setup(spark).has_errors
 
 
 def test_parquet_target_compaction(spark, tmp_path):

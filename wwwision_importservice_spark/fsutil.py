@@ -32,22 +32,31 @@ def _fs_and_path(spark: SparkSession, path: str):
     return hadoop_path.getFileSystem(jsc.hadoopConfiguration()), hadoop_path
 
 
+def _data_file_statuses(spark: SparkSession, path: str) -> list:
+    fs, p = _fs_and_path(spark, path)
+    if not fs.exists(p):
+        return []
+    out = []
+    it = fs.listFiles(p, True)
+    while it.hasNext():
+        st = it.next()
+        if not st.getPath().getName().startswith(("_", ".")):
+            out.append(st)
+    return out
+
+
 def list_data_files(spark: SparkSession, path: str) -> list[str]:
     """Recursively list non-hidden data files under ``path`` (skipping
     ``_SUCCESS``/dot-files) — the observable for compaction tests and
     small-file accounting. Metadata-scale: touches the namespace, never
     file contents."""
-    fs, p = _fs_and_path(spark, path)
-    if not fs.exists(p):
-        return []
-    out: list[str] = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next().getPath()
-        name = f.getName()
-        if not name.startswith(("_", ".")):
-            out.append(f.toString())
-    return out
+    return [st.getPath().toString() for st in _data_file_statuses(spark, path)]
+
+
+def data_bytes(spark: SparkSession, path: str) -> int:
+    """Total length of the files :func:`list_data_files` lists, from
+    the same namespace listing."""
+    return sum(int(st.getLen()) for st in _data_file_statuses(spark, path))
 
 
 def list_child_dirs(spark: SparkSession, path: str) -> list[str]:

@@ -108,7 +108,9 @@ class ImportPipeline:
     def compute_changes(self, force_updates: bool = False) -> DataFrame:
         """Extract + key + process + diff → CDC frame (lazy): one
         full-outer join of the keyed records against the target's
-        current keyset (``operators/diff.py``)."""
+        current keyset (``operators/diff.py``). The frame reads the
+        target's ``current_state``; call ``target.release_state`` once
+        done with it (``run`` and ``explain`` do)."""
         records = self.preset.load(self.spark)
         if self.preset.quality_checks:
             # data-quality preflight (operators/quality_checks.py): the
@@ -125,17 +127,22 @@ class ImportPipeline:
                 raise ImportServiceError(str(exc)) from exc
         self._dispatch(Events.PRE_COMPUTE_CHANGES, records)
         target = self.preset.target
-        return compute_changes(
-            records.df,
-            target.current_state(self.spark),
-            force_updates=force_updates,
-            skip_added=self.preset.skip_added,
-            skip_removed=self.preset.skip_removed,
-            local_id_col=target.id_column,
-            local_version_col=target.version_column,
-            local_hidden_col=target.hidden_column,
-            id_prefix=target.id_prefix,
-        )
+        state = target.current_state(self.spark)
+        try:
+            return compute_changes(
+                records.df,
+                state,
+                force_updates=force_updates,
+                skip_added=self.preset.skip_added,
+                skip_removed=self.preset.skip_removed,
+                local_id_col=target.id_column,
+                local_version_col=target.version_column,
+                local_hidden_col=target.hidden_column,
+                id_prefix=target.id_prefix,
+            )
+        except BaseException:
+            target.release_state(self.spark)
+            raise
 
     def explain(self, force_updates: bool = False) -> str:
         """Formatted physical plan of the diff, without executing it —
@@ -146,7 +153,10 @@ class ImportPipeline:
         mode = self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
-        return cdc._jdf.queryExecution().explainString(mode)
+        try:
+            return cdc._jdf.queryExecution().explainString(mode)
+        finally:
+            self.preset.target.release_state(self.spark)
 
     def run(
         self,
@@ -276,6 +286,7 @@ class ImportPipeline:
             }
         finally:
             cdc.unpersist()
+            self.preset.target.release_state(self.spark)
 
     def _apply_mapping(self, cdc: DataFrame) -> DataFrame:
         """K11 at the set level: map attribute columns, carry engine columns."""

@@ -105,7 +105,13 @@ def local_frame(
 
     Spark plans it as a ``LocalTableScan``. ``createDataFrame`` over a
     Python list plans ``Scan ExistingRDD`` over a ``PythonRDD`` instead,
-    which starts a Python worker per partition even for zero rows."""
+    which starts a Python worker per partition even for zero rows.
+
+    Keep such frames small: the rows sit in a ``LocalRelation`` plan
+    field that every analyzer, optimizer and cache-lookup rule copies.
+    The connected-components fast path stays under
+    ``small_graph_threshold``; the DBAPI keyset read spills to parquet
+    instead (``sinks/dbapi.py``)."""
     if isinstance(schema, str):
         schema = DataType.fromDDL(schema)
     arrow = to_arrow_schema(schema)

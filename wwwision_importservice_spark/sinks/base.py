@@ -51,6 +51,10 @@ class DataTarget(ABC):
         mirrors the reference's pruned target-state scan
         (``DbalTarget.php:118-128``)."""
 
+    def release_state(self, spark: SparkSession) -> None:
+        """Free what the ``current_state`` frames returned so far hold
+        once their user is done with them (no-op by default)."""
+
     # column names the diff kernel should use on current_state()
     id_column: str = "id"
     version_column: str | None = None

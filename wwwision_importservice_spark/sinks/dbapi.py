@@ -24,11 +24,18 @@ The Python analogue of the reference's Doctrine-DBAL target
 State read (``current_state``, ``DbalTarget.php:118-128``): the narrow
 keyset ``(id[, version][, hidden])`` is fetched driver-side in
 ``fetchmany`` batches of ``KEYSET_FETCH_ROWS``; each batch is normalised
-column by column into one Arrow record batch, and the batches reach
-Spark as one Arrow table. The Python-tuple footprint is one fetch batch,
-not the whole keyset (the reference holds it all in a PHP array), and
-the frame is an eager snapshot: the connection is closed before it is
-returned and it never reads the table again.
+column by column into one Arrow record batch and written through one
+``ParquetWriter`` into a private spill directory under Spark's driver
+temp dir (``SparkFiles.getRootDirectory()``, deleted when the session
+stops). The frame Spark gets is a parquet scan of that spill, so the
+plan carries a file-scan leaf whose size does not grow with the keyset
+(a ``LocalRelation`` would hold every row in a plan field that each
+Catalyst rule copies). Python holds one fetch batch at a time, and the
+frame is an eager snapshot: the connection is closed before it is
+returned and it never reads the table again. :meth:`release_state`
+deletes the spill once the diff is done with it. The spill is a
+driver-local path, so a non-local master needs executors that share
+that filesystem.
 
 Distribution model: one driver connection, like the reference's single
 DBAL connection. ``apply`` streams the projected change set into the
@@ -57,13 +64,18 @@ run's diff re-converges it).
 from __future__ import annotations
 
 import contextlib
+import shutil
+import tempfile
 import warnings
 from collections.abc import Callable
+from pathlib import Path
 from typing import Any
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from wwwision_importservice_spark.operators.diff import CHANGE_TYPE_COL, ChangeType
 from wwwision_importservice_spark.plans.result import Result
@@ -96,6 +108,13 @@ def _int_column(values: tuple) -> list:
 
 def _hidden_column(values: tuple) -> list:
     return [bool(v) if v is not None else False for v in values]
+
+
+def spill_root(spark: SparkSession) -> Path:
+    """The directory that holds every keyset spill of this session:
+    under the driver temp dir, which Spark deletes on ``stop()``."""
+    jvm = spark.sparkContext._jvm
+    return Path(jvm.org.apache.spark.SparkFiles.getRootDirectory()) / "dbapi_keyset"
 
 
 class _ChunkWriter:
@@ -206,6 +225,7 @@ class DbapiTarget(DataTarget):
                 "named styles would fail on every statement at execute time"
             )
         self.placeholder = _PARAMSTYLES[paramstyle]
+        self._spills: list[Path] = []
 
     # ------------------------------------------------------------------ #
     def current_state(self, spark: SparkSession) -> DataFrame:
@@ -214,33 +234,55 @@ class DbapiTarget(DataTarget):
         The keyset is read columnar: each ``fetchmany(KEYSET_FETCH_ROWS)``
         batch is transposed, normalised per column (id → ``str``,
         version → ``int``, both keeping NULL; NULL hidden → ``False``)
-        and becomes one Arrow record batch, so at most one batch of
-        Python tuples is alive at a time. The frame is an eager
-        snapshot: the connection is closed before the Arrow table is
-        handed to Spark, so later writes to the table (``apply`` of this
-        very run) never show through it."""
+        and written as one row group of a driver-local parquet spill
+        (see :func:`spill_root`), so at most one batch is alive in Python
+        and Arrow at a time. The frame is a parquet scan of the spill
+        with the keyset schema given, so reading it back starts no job.
+        It is an eager snapshot: the connection is closed before it is
+        returned, so later writes to the table (``apply`` of this very
+        run) never show through it. The spill lives until
+        :meth:`release_state`; a failed fetch deletes it at once. On a
+        non-local master the executors must share the driver's
+        filesystem to read it."""
         keyset = [(self.id_column, pa.string(), _str_column)]
         if self.version_column:
             keyset.append((self.version_column, pa.int64(), _int_column))
         if self.hidden_column:
             keyset.append((self.hidden_column, pa.bool_(), _hidden_column))
         schema = pa.schema([(name, typ) for name, typ, _ in keyset])
-        batches = []
-        conn = self.connection_factory()
+        root = spill_root(spark)
+        root.mkdir(parents=True, exist_ok=True)
+        spill = Path(tempfile.mkdtemp(dir=root))
         try:
-            cur = conn.cursor()
-            cur.execute(f"SELECT {', '.join(schema.names)} FROM {self.table}")
-            while rows := cur.fetchmany(KEYSET_FETCH_ROWS):
-                batches.append(pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(norm(column), typ)
-                        for (_, typ, norm), column in zip(keyset, zip(*rows))
-                    ],
-                    schema=schema,
-                ))
-        finally:
-            conn.close()
-        return spark.createDataFrame(pa.Table.from_batches(batches, schema))
+            conn = self.connection_factory()
+            try:
+                cur = conn.cursor()
+                cur.execute(f"SELECT {', '.join(schema.names)} FROM {self.table}")
+                # the ids are unique: a dictionary would only cost CPU
+                with pq.ParquetWriter(
+                    spill / "keyset.parquet", schema, use_dictionary=False
+                ) as writer:
+                    while rows := cur.fetchmany(KEYSET_FETCH_ROWS):
+                        writer.write_batch(pa.RecordBatch.from_arrays(
+                            [
+                                pa.array(norm(column), typ)
+                                for (_, typ, norm), column in zip(keyset, zip(*rows))
+                            ],
+                            schema=schema,
+                        ))
+            finally:
+                conn.close()
+        except BaseException:
+            shutil.rmtree(spill, ignore_errors=True)
+            raise
+        self._spills.append(spill)
+        return spark.read.schema(from_arrow_schema(schema)).parquet(spill.as_uri())
+
+    def release_state(self, spark: SparkSession) -> None:
+        """Delete the spills of every ``current_state`` frame this target
+        has returned; those frames must not be read again."""
+        while self._spills:
+            shutil.rmtree(self._spills.pop(), ignore_errors=True)
 
     # ------------------------------------------------------------------ #
     def _attr_columns(self, cdc: DataFrame) -> list[str]:

@@ -26,7 +26,6 @@ the writer for ``DeltaTable.merge`` is localized here.
 
 from __future__ import annotations
 
-import os
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +45,8 @@ class SnapshotTarget(DataTarget):
     rewritten whole by every apply (parquet, SCD2)."""
 
     path: str
+    #: how ``setup`` names the target in its notices
+    label: str
 
     def exists(self) -> bool:
         return self._present(SparkSession.active())
@@ -55,6 +56,18 @@ class SnapshotTarget(DataTarget):
         # snapshot never reads as "never written"
         fsutil.recover_dir(spark, self.path)
         return fsutil.path_exists(spark, self.path)
+
+    def setup(self, spark: SparkSession) -> Result:
+        result = Result()
+        head, sep, _ = self.path.rstrip("/").rpartition("/")
+        parent = head or sep or "."
+        if not fsutil.path_exists(spark, parent):
+            result.add_error(f'Parent directory "{parent}" does not exist')
+        elif self._present(spark):
+            result.add_notice(f'{self.label} "{self.path}" exists')
+        else:
+            result.add_notice(f'{self.label} "{self.path}" will be created on first run')
+        return result
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         if not self._present(spark):
@@ -68,6 +81,8 @@ class SnapshotTarget(DataTarget):
 
 
 class ParquetTarget(SnapshotTarget):
+    label = "Target table"
+
     def __init__(
         self,
         path: str,
@@ -229,26 +244,9 @@ class ParquetTarget(SnapshotTarget):
         existing = self.read(spark)
         if existing is None:
             return 0
-        total_bytes = sum(
-            e.stat().st_size
-            for e in os.scandir(self.path)
-            if e.name.endswith(".parquet")
-        )
+        total_bytes = fsutil.data_bytes(spark, self.path)
         n_files = max(1, -(-total_bytes // target_file_bytes))  # ceil
         self._write_snapshot(
             existing.repartitionByRange(n_files, F.col(self.id_column))
         )
-        return sum(
-            1 for e in os.scandir(self.path) if e.name.endswith(".parquet")
-        )
-
-    def setup(self, spark: SparkSession) -> Result:
-        result = Result()
-        parent = os.path.dirname(self.path.rstrip("/")) or "."
-        if not os.path.isdir(parent):
-            result.add_error(f'Parent directory "{parent}" does not exist')
-        elif self.exists():
-            result.add_notice(f'Target table "{self.path}" exists')
-        else:
-            result.add_notice(f'Target table "{self.path}" will be created on first run')
-        return result
+        return len(fsutil.list_data_files(spark, self.path))

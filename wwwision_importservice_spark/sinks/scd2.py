@@ -47,13 +47,10 @@ side policy, which is exactly the separation the CDC-frame interface
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wwwision_importservice_spark.operators.diff import CHANGE_TYPE_COL, ChangeType
-from wwwision_importservice_spark.plans.result import Result
 from wwwision_importservice_spark.plans.schema import OptionsSchema
 from wwwision_importservice_spark.record import ID_COL, VERSION_COL
 from wwwision_importservice_spark.session import local_frame
@@ -66,6 +63,8 @@ IS_CURRENT_COL = "is_current"
 
 
 class Scd2ParquetTarget(SnapshotTarget):
+    label = "SCD2 target"
+
     def __init__(
         self,
         path: str,
@@ -251,16 +250,3 @@ class Scd2ParquetTarget(SnapshotTarget):
                 )
             )
         return count
-
-    def setup(self, spark: SparkSession) -> Result:
-        result = Result()
-        parent = os.path.dirname(self.path.rstrip("/")) or "."
-        if not os.path.isdir(parent):
-            result.add_error(f'Parent directory "{parent}" does not exist')
-        elif self.exists():
-            result.add_notice(f'SCD2 target "{self.path}" exists')
-        else:
-            result.add_notice(
-                f'SCD2 target "{self.path}" will be created on first run'
-            )
-        return result

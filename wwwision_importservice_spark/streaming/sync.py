@@ -152,6 +152,7 @@ def stream_sync(
             target.finalize(spark)
         finally:
             cdc.unpersist()
+            target.release_state(spark)
         if on_batch is not None:
             on_batch(
                 batch_id,
